@@ -98,8 +98,8 @@ object SparkEntry {
 
   /** Docs with >= 3 words (the near-dup operators' domain guard, shared with
     * the oracles' `len(words) >= 3`). regexp_count("\\S+") counts exactly the
-    * non-empty \s+-split tokens WITHOUT the CodegenFallback filter-lambda of
-    * Dedup.words — this predicate sits in the corpus scan of every LSH gate
+    * non-empty \s+-split tokens WITHOUT a CodegenFallback filter lambda —
+    * this predicate sits in the corpus scan of every LSH gate
     * query, so it must stay inside whole-stage codegen (CLAUDE.md rule). */
   private def docs3Plus(dir: String)(implicit spark: SparkSession): DataFrame =
     t(dir, "documents").where(TextOps.tokenCount(col("text")) >= 3)
@@ -1059,7 +1059,7 @@ object SparkEntry {
       // candidate-pruned result equals the exact result on this corpus.
       implicit val s: SparkSession = spark
       // domain guard shared with the oracle: docs under 3 words collapse to a
-      // single concat-shingle in Dedup.shingles while positional SQL gram
+      // single concat-shingle in Dedup.shingleSet while positional SQL gram
       // construction yields none — exclude them on BOTH sides so the gate
       // compares identical semantics (the operator's short-doc behavior is
       // pinned separately in DedupSpec)
@@ -1160,8 +1160,7 @@ object SparkEntry {
 
     "d_simhash" -> ((spark, dir) => {
       // 32-bit EXPRESSIBLE SimHash, hash-exact vs the DuckDB bit-majority
-      // oracle (the 64-bit xxhash64 variant Dedup.simhash stays available;
-      // this judged form proves the bits, not just the shape).
+      // oracle: the judged form proves the bits, not just the shape.
       implicit val s: SparkSession = spark
       t(dir, "documents").where(col("doc_id") < 50)
         .select(col("doc_id"), Dedup.simhash32(col("text")).as("simhash"))

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
  * The HOF chain is CodegenFallback (interpreted lambda per element, and one
  * in a predicate knocks the stage out of whole-stage codegen — CLAUDE.md
  * rule); this is a tight long loop shipped as a codegen reference object,
- * same pattern as MinHashSignature / SignBucket.
+ * same pattern as SignBucket.
  *
  * Null semantics match the HOF formulation: null array -> null; a null
  * ELEMENT poisons the sum -> null; a LENGTH MISMATCH yields null (zip_with

@@ -25,9 +25,9 @@ import org.apache.spark.sql.types._
  *
  * The plane matrix is computed once per JVM and the projection is a tight
  * long loop; doGenCode ships a reference object so surrounding stages keep
- * whole-stage codegen (same pattern as MinHashSignature). The equivalent
- * built-ins formulation (Similarity.signBucketHof) runs the same math
- * through interpreted lambda HOFs — kept only as a cross-check oracle.
+ * whole-stage codegen (same pattern as the ExpressibleHash `*X` expressions).
+ * A built-ins formulation of the same math (interpreted lambda HOFs) lives in
+ * the test sources as a cross-check reference (HofReference.signBucket).
  */
 case class SignBucket(child: Expression, planes: Int) extends UnaryExpression {
   require(planes > 0 && planes <= 63, "planes must be in (0, 63]")

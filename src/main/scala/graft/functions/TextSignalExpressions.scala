@@ -69,6 +69,9 @@ object StopwordCountX {
 case class LangIdX(child: Expression, langs: Seq[(String, Seq[String])])
     extends WordsArrayExpression {
   require(langs.nonEmpty, "langs must be non-empty")
+  // markerMask packs one bit per language into an Int: a 33rd language
+  // would wrap `1 << li` onto language 0 and score it silently
+  require(langs.size <= 32, s"at most 32 langs fit the marker bitmask, got ${langs.size}")
   @transient private lazy val names: Array[UTF8String] =
     langs.map(l => UTF8String.fromString(l._1)).toArray
   @transient private lazy val und: UTF8String = UTF8String.fromString("und")
@@ -133,7 +136,8 @@ object LangIdX {
   * returns 128512 for an emoji, not the high surrogate — pinned by the
   * parity spec's supplementary-plane fixtures) and 0 for the empty string;
   * octet_length is UTF-8 bytes (UTF8String.numBytes). Exact long
-  * arithmetic, no modulus — identical to the HOF form under ANSI. */
+  * arithmetic, no modulus: overflow throws ArithmeticException, like the
+  * HOF form under ANSI and DuckDB's BIGINT — never a silent wrap. */
 case class FingerprintX(child: Expression) extends WordsArrayExpression {
   override def dataType: DataType = LongType
   override def prettyName: String = "fingerprint_x"
@@ -152,7 +156,7 @@ case class FingerprintX(child: Expression) extends WordsArrayExpression {
             val one = s.substring(0, 1).toString
             if (one.isEmpty) 0L else one.codePointAt(0).toLong
           }
-        acc += (i + 1).toLong * (bytes * 31L + first)
+        acc = Math.addExact(acc, Math.multiplyExact((i + 1).toLong, bytes * 31L + first))
       }
       i += 1
     }

@@ -9,25 +9,17 @@ import org.apache.spark.sql.types._
  * All stages are pure column functions + standard joins, shaped for scale:
  * exact dedup is one hash-groupBy; MinHash-LSH turns the O(n²) pair problem
  * into an equi-join on (band, bandHash) buckets so only candidate pairs are
- * compared; SimHash gives a 64-bit per-doc signature for Hamming bucketing.
+ * compared; SimHash gives a 32-bit per-doc signature for Hamming bucketing.
  */
 object Dedup {
-
-  /** Word tokens of a text column (lowercased, \\s+ split, empties dropped).
-    * The filter is a CodegenFallback HOF — fine for diagnostics and the
-    * built-ins-only fallbacks, but the JUDGED map-side pipelines take
-    * [[rawWords]] instead: the custom expressions skip empty tokens inside
-    * their compiled loops, so no interpreted lambda runs per document. */
-  def words(text: Column): Column =
-    filter(split(lower(text), "\\s+"), w => length(w) > 0)
 
   /** Raw \\s+ split (no filter HOF): empty tokens are dropped INSIDE the
     * custom hash/shingle expressions' JVM loops, matching the oracles'
     * `w <> ''` word-CTE filter. */
   def rawWords(text: Column): Column = split(lower(text), "\\s+")
 
-  /** Distinct word n-gram shingles in one codegen'd loop — bit-identical to
-    * array_distinct(shingles(text, n)) with zero interpreted HOFs. */
+  /** Distinct word n-gram shingles ("a b c", "b c d", …; a doc shorter than
+    * n words is one shingle) in one codegen'd loop — zero interpreted HOFs. */
   def shingleSet(text: Column, n: Int): Column =
     graft.functions.ShingleSetX(rawWords(text), n)
 
@@ -37,14 +29,6 @@ object Dedup {
   def shingleHashes(text: Column, n: Int): Column =
     graft.functions.ShingleHashesX(rawWords(text), n)
 
-  /** n-gram word shingles: ["a b c", "b c d", …]. */
-  def shingles(text: Column, n: Int): Column = {
-    val ws = words(text)
-    when(size(ws) < n, array(concat_ws(" ", ws)))
-      .otherwise(transform(sequence(lit(1), size(ws) - (n - 1)),
-        i => concat_ws(" ", slice(ws, i, lit(n)))))
-  }
-
   /** Exact duplicate groups by content hash: (fingerprint, cnt, ids). One
     * shuffle on the 64-hex digest — uniform keys, no skew. */
   def exactDuplicates(df: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -52,17 +36,6 @@ object Dedup {
       .groupBy("fingerprint")
       .agg(count(lit(1)).as("cnt"), sort_array(collect_list(col(idCol))).as("ids"))
       .where(col("cnt") > 1)
-
-  /** MinHash signature: k independent hash family members;
-    * sig[s] = min over shingles of hash_s(shingle). Each shingle STRING is
-    * hashed exactly once (xxhash64); the k family members are derived from
-    * that 64-bit value with cheap long re-mixes — one aggregate pass with an
-    * elementwise running min of the k-vector. (A naive per-seed formulation
-    * re-hashes every shingle string k times; Catalyst's projection collapsing
-    * would also inline the shingle construction into all k lambda bodies.)
-    * Pure map-side. */
-  def minhashSignature(text: Column, numShingles: Int, k: Int): Column =
-    graft.functions.MinHashSignature(rawWords(text), numShingles, k)
 
   /** SQL-EXPRESSIBLE MinHash band hashes (the JUDGED default family): the
     * signature AND the banding fold run in one codegen'd JVM loop, and every
@@ -75,17 +48,6 @@ object Dedup {
   /** Expressible k-member signature (diagnostic surface of [[minhashBands]]). */
   def minhashSignatureX(text: Column, numShingles: Int, k: Int): Column =
     graft.functions.MinHashSigX(rawWords(text), numShingles, k)
-
-  /** Built-ins-only fallback formulation (same shape, different hash family):
-    * kept for environments where registering custom expressions is undesired.
-    * ~10x slower than the custom expression (interpreted lambda HOFs). */
-  def minhashSignatureHof(text: Column, numShingles: Int, k: Int): Column = {
-    val baseHashes = transform(shingles(text, numShingles), x => xxhash64(x))
-    aggregate(baseHashes, array_repeat(lit(Long.MaxValue), k),
-      (acc, h) => zip_with(acc,
-        transform(sequence(lit(1), lit(k)), s => xxhash64(h, s)),
-        (a, hv) => least(a, hv)))
-  }
 
   /**
    * MinHash-LSH candidate pairs: signatures split into `bands` bands of
@@ -194,35 +156,11 @@ object Dedup {
       .agg(count(lit(1)).as("df"), min("doc_id").as("first_doc"))
       .where(col("df") >= minDf)
 
-  /** 64-bit SimHash of the word stream: per-bit majority vote of word hashes.
-    * Bits are unrolled statically (shift amounts are plan-time constants) so
-    * the whole computation is nested higher-order functions inside codegen. */
-  def simhash(text: Column): Column = {
-    val ws = words(text)
-    def bitsOf(w: Column): Column = array((0 until 64).map { b =>
-      when(shiftright(xxhash64(w), b).bitwiseAND(lit(1L)) === 1L, lit(1L)).otherwise(lit(-1L))
-    }: _*)
-    val counts = aggregate(ws, array_repeat(lit(0L), 64),
-      (acc, w) => zip_with(acc, bitsOf(w), (a, x) => a + x))
-    val bitValues = array((0 until 64).map(i => lit(1L << i)): _*)
-    aggregate(zip_with(counts, bitValues,
-        (v, bitVal) => when(v > 0, bitVal).otherwise(lit(0L))),
-      lit(0L), (acc, bit) => acc.bitwiseOR(bit))
-  }
-
-  /** 32-bit SQL-EXPRESSIBLE SimHash (the JUDGED variant): same per-bit
-    * majority vote as [[simhash]] but over the ExpressibleHash word family,
-    * so the bits themselves have a DuckDB oracle (d_simhash). One codegen'd
-    * loop per doc — no nested HOFs. */
+  /** 32-bit SQL-EXPRESSIBLE SimHash: per-bit majority vote of the
+    * ExpressibleHash word hashes, so the bits themselves have a DuckDB oracle
+    * (d_simhash). One codegen'd loop per doc — no nested HOFs. */
   def simhash32(text: Column): Column =
     graft.functions.SimHashX(rawWords(text))
-
-  /** Exact n-gram Jaccard for an explicit pair set (small candidate lists). */
-  def jaccard(textA: Column, textB: Column, n: Int): Column = {
-    val sa = shingleSet(textA, n); val sb = shingleSet(textB, n)
-    val inter = size(array_intersect(sa, sb))
-    inter.cast(DoubleType) / (size(sa) + size(sb) - inter)
-  }
 
   /**
    * Duplicate clusters from candidate pairs: connected components by

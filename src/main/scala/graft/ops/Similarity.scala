@@ -13,8 +13,9 @@ import org.apache.spark.sql.types._
  *
  * Scale path: random-hyperplane LSH sign buckets; candidates are restricted to
  * the query's bucket (or multi-probe neighbors), turning an all-pairs scan into
- * a bucket-pruned one. Hyperplanes are derived deterministically from xxhash64
- * so every executor materializes identical planes with no driver state.
+ * a bucket-pruned one. Hyperplane weights come from the integer
+ * SignBucket.planeWeight hash of (plane, dim), so every executor materializes
+ * identical planes with no driver state.
  */
 object Similarity {
 
@@ -123,16 +124,6 @@ object Similarity {
     spark.read.parquet(path)
   }
 
-  /** Dot product of two float-array columns via zip_with + aggregate.
-    * INTERPRETED (CodegenFallback HOFs) — kept only as the cross-check
-    * baseline for the codegen'd ScaledIntDot paths; never in a scale path. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (s, x) => s + x)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   /** Codegen'd scaled-integer cosine of the corpus column `vecCol` against a
     * literal query: shared by the brute-force and scan-time ANN baselines so
     * neither carries an interpreted lambda in its hot projection. Two-step
@@ -156,32 +147,9 @@ object Similarity {
   /** LSH sign bucket: one bit per hyperplane = sign of <scaled(vec), plane>.
     * Codegen'd custom expression, exact-integer arithmetic (plane weights and
     * int64-scaled components — SQL-oracle-reproducible, no float sign
-    * boundary nondeterminism) — bit-identical to [[signBucketHof]]. */
+    * boundary nondeterminism). */
   def signBucket(vec: Column, planes: Int): Column =
     graft.functions.SignBucket(vec, planes)
-
-  /** Deterministic integer plane weight in [-500, 500) as Column arithmetic
-    * (same Murmur-style finalizer as SignBucket.planeWeight). */
-  private def planeWeightCol(p: Int, d: Column): Column = {
-    val m = lit(4294967296L)
-    val h1 = pmod((d.cast(LongType) + lit(p.toLong * 65537L + 17L)) * lit(1664525L), m)
-    val h2 = pmod(h1.bitwiseXOR(shiftright(h1, 16)) * lit(747796405L), m)
-    val h3 = h2.bitwiseXOR(shiftright(h2, 13))
-    pmod(h3, lit(1000L)) - lit(500L)
-  }
-
-  /** Built-ins-only formulation (aggregate/zip_with/transform lambdas) —
-    * kept as the cross-check oracle for the custom expression; the HOFs are
-    * CodegenFallback so this runs interpreted per element per plane. */
-  def signBucketHof(vec: Column, planes: Int): Column = {
-    val scaled = transform(vec, x => round(x * 1e7).cast(LongType))
-    val bits = (0 until planes).map { p =>
-      val w = transform(sequence(lit(0), size(vec) - 1), d => planeWeightCol(p, d))
-      val proj = aggregate(zip_with(scaled, w, (x, y) => x * y), lit(0L), (s, x) => s + x)
-      when(proj >= 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
-  }
 
   /** Brute-force cosine top-k against a literal query vector — codegen'd
     * ScaleVec/ScaledIntDot end to end (no lambdafunction in the executed

@@ -6,8 +6,8 @@ import org.apache.spark.sql.types._
 
 /**
  * Text-analysis operators for training-data curation: token counting, quality
- * scoring, language identification, document fingerprinting. All pure column
- * functions (codegen'd); no UDFs, no driver loops.
+ * scoring, language identification, repetition stats, sampling. All pure
+ * column functions (codegen'd); no UDFs, no driver loops.
  */
 object TextOps {
 
@@ -99,11 +99,4 @@ object TextOps {
     * (per-language / per-source rates for stratified mixing). */
   def keepSample(id: Column, permille: Column): Column =
     pmod(graft.functions.ExpressibleHash.mix32Col(id), lit(1000L)) < permille
-
-  /** Document fingerprint: position-weighted rolling hash over words —
-    * order-sensitive (unlike a bag-of-words hash), cheap, exact-integer. */
-  def fingerprint(text: Column): Column =
-    aggregate(Dedup.words(text), lit(0L),
-      (acc, w) => pmod(acc * 1000003L + pmod(xxhash64(w), lit(1000000007L)),
-        lit(1000000007L))) // mod each step: ANSI mode makes silent overflow an error
 }

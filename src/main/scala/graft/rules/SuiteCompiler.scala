@@ -14,12 +14,11 @@ final case class ViolationRow(doc_id: String, rule_id: String, observed: String,
   * `pass` is a BooleanType predicate (true = row passes) — kept free of
   * row-level allocation so the scan+predicate pipeline stays inside
   * whole-stage codegen; `violations` (array<struct<rule_id,observed,expected>>,
-  * one entry per failed check) and `violationCount` are only evaluated behind
-  * a failing-rows filter / CASE WHEN, so clean rows never pay for report
-  * construction — the Column analogue of the reference's errors=NULL
-  * suppressed validation (json_schema_validate.c:1551 etc.). */
-final case class CompiledRule(id: String, pass: Column, violations: Column,
-                              violationCount: Column)
+  * one entry per failed check) is only evaluated behind a failing-rows
+  * filter / CASE WHEN, so clean rows never pay for report construction —
+  * the Column analogue of the reference's errors=NULL suppressed validation
+  * (json_schema_validate.c:1551 etc.). */
+final case class CompiledRule(id: String, pass: Column, violations: Column)
 
 /**
  * Compiles a ValidationSuite document — JSON Schema keywords applied to the
@@ -69,13 +68,6 @@ object SuiteCompiler {
       * touches failing rows. */
     def violationCountCol: Column =
       rules.map(r => when(r.pass, lit(0)).otherwise(lit(1)))
-        .reduceOption(_ + _).getOrElse(lit(0))
-
-    /** Exact per-row violation-entry count (per-element for array rules).
-      * Uses lambda HOFs — keep OFF aggregation hot paths; intended for
-      * reporting jobs that already filter to failing rows. */
-    def exactViolationCountCol: Column =
-      rules.map(r => when(r.pass, lit(0)).otherwise(r.violationCount))
         .reduceOption(_ + _).getOrElse(lit(0))
 
     /** Exploded typed violations, sorted (doc_id, rule_id) — the deterministic
@@ -211,8 +203,7 @@ object SuiteCompiler {
       case JBool(false) =>
         return Vector(CompiledRule(s"$colName:false",
           lit(false),
-          array(mkViolation(s"$colName:false", lit("Schema is false"), "false")),
-          lit(1)))
+          array(mkViolation(s"$colName:false", lit("Schema is false"), "false"))))
       case _ => return Vector.empty // malformed fragments vacuous (c:675 etc.)
     }
     val c = col(colName)
@@ -225,8 +216,7 @@ object SuiteCompiler {
       val id = s"$colName:$keyword"
       val p = guarded(pred)
       out += CompiledRule(id, p,
-        when(!p, array(mkViolation(id, observed, expected))).otherwise(array().cast(violationsType)),
-        lit(1))
+        when(!p, array(mkViolation(id, observed, expected))).otherwise(array().cast(violationsType)))
     }
 
     // required (extension: boolean flag → null check; message format c:768-771)
@@ -236,8 +226,7 @@ object SuiteCompiler {
         val p = c.isNotNull
         out += CompiledRule(id, p,
           when(!p, array(mkViolation(id, lit(s"Missing required property: $colName"),
-            "true"))).otherwise(array().cast(violationsType)),
-          lit(1))
+            "true"))).otherwise(array().cast(violationsType)))
       case _ => ()
     }
 
@@ -358,8 +347,7 @@ object SuiteCompiler {
             flatten(zip_with(c, sequence(lit(0), size(c) - 1), (e, i) =>
               elemViolations(id, colName, e, i, elemMsgs)))
           ).otherwise(array().cast(violationsType))
-          val cnt = size(filter(c, e => !elemPred(e)))
-          out += CompiledRule(id, pass, viols, cnt)
+          out += CompiledRule(id, pass, viols)
         }
       case _ => () // non-object items vacuous
     }
@@ -391,7 +379,7 @@ object SuiteCompiler {
           val p = guarded(map_contains_key(c, k))
           out += CompiledRule(id, p,
             when(!p, array(mkViolation(id, lit(s"Missing required property: $k"), s""""$k"""")))
-              .otherwise(array().cast(violationsType)), lit(1))
+              .otherwise(array().cast(violationsType)))
         }
       case _ => ()
     }
@@ -440,7 +428,7 @@ object SuiteCompiler {
               format_string("Additional property '%s' is not allowed", k).as("observed"),
               lit("false").as("expected"))))
             .otherwise(array().cast(violationsType))
-          out += CompiledRule(id, pass, viols, size(offending))
+          out += CompiledRule(id, pass, viols)
         case apSchema: JObj =>
           // schema-valued: non-exempt VALUES are validated against the
           // sub-schema (c:1465-1476; walker parity JsonSchemaValidator
@@ -463,7 +451,7 @@ object SuiteCompiler {
                 if (perCheck.size == 1) perCheck.head else flatten(array(perCheck: _*))
               })))
               .otherwise(array().cast(violationsType))
-            out += CompiledRule(id, pass, viols, size(failing))
+            out += CompiledRule(id, pass, viols)
           }
         case _ => () // true / malformed: vacuous
       }
@@ -490,7 +478,7 @@ object SuiteCompiler {
           // error accumulation from ALL branches (c:1514-1518)
           val viols = if (compiled.size == 1) compiled.head._2
                       else flatten(array(compiled.map(_._2): _*))
-          out += CompiledRule(id, pass, viols, lit(1))
+          out += CompiledRule(id, pass, viols)
         }
       case _ => () // non-array vacuous (c:1502-1507)
     }
@@ -504,7 +492,7 @@ object SuiteCompiler {
           out += CompiledRule(id, pass,
             when(!pass, array(mkViolation(id,
               lit("Value does not match any schema in anyOf"), Json.render(JArr(subs)))))
-              .otherwise(array().cast(violationsType)), lit(1))
+              .otherwise(array().cast(violationsType)))
         }
       case _ => ()
     }
@@ -520,7 +508,7 @@ object SuiteCompiler {
             .otherwise(format_string("Value matches %d schemas in oneOf, but must match exactly one", matches))
           out += CompiledRule(id, pass,
             when(!pass, array(mkViolation(id, msg, Json.render(JArr(subs)))))
-              .otherwise(array().cast(violationsType)), lit(1))
+              .otherwise(array().cast(violationsType)))
         }
       case _ => ()
     }
@@ -532,7 +520,7 @@ object SuiteCompiler {
         out += CompiledRule(id, pass,
           when(!pass, array(mkViolation(id,
             lit("Value must not match the schema in 'not'"), Json.render(sub))))
-            .otherwise(array().cast(violationsType)), lit(1))
+            .otherwise(array().cast(violationsType)))
       }
     }
 
@@ -547,7 +535,7 @@ object SuiteCompiler {
             .otherwise(elsePV.map(_._1).getOrElse(lit(true)))
           val viols = when(ifPass, thenPV.map(_._2).getOrElse(emptyV))
             .otherwise(elsePV.map(_._2).getOrElse(emptyV))
-          out += CompiledRule(id, pass, viols, lit(1))
+          out += CompiledRule(id, pass, viols)
         }
       }
     }
@@ -591,8 +579,7 @@ object SuiteCompiler {
         .when(typeof(c).isin("tinyint", "smallint", "int", "bigint", "double", "float") || typeof(c).startsWith("decimal"), "number")
         .otherwise(typeof(c)))
     CompiledRule(id, pass,
-      when(!pass, array(mkViolation(id, observed, expectedJson))).otherwise(array().cast(violationsType)),
-      lit(1))
+      when(!pass, array(mkViolation(id, observed, expectedJson))).otherwise(array().cast(violationsType)))
   }
 
   /** String-shaped predicate for propertyNames keys (pattern/length/enum). */

@@ -124,7 +124,7 @@ class PlanAuditSpec extends AnyFunSuite {
       .withColumn("b", graft.ops.Similarity.signBucket(col("embedding"), 16))
       .where(col("b").isin(probeSet: _*))
       .select(col("vec_id"),
-        graft.ops.Similarity.cosine(col("embedding"), array(q.map(lit(_)): _*)).as("c"))
+        HofReference.cosine(col("embedding"), array(q.map(lit(_)): _*)).as("c"))
       .orderBy(desc("c"), col("vec_id")).limit(5)
       .collect().map(_.getLong(0))
     assert(gotIds === want)

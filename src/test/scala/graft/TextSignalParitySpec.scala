@@ -131,4 +131,24 @@ class TextSignalParitySpec extends AnyFunSuite {
       if (!r.isNullAt(4)) assert(r.getLong(4) === r.getLong(5))
     }
   }
+
+  test("FingerprintX throws on Long overflow instead of wrapping") {
+    // 4.1M copies of one U+10FFFF word: each term is p * (4 * 31 + 0x10FFFF),
+    // and the position-weighted sum passes Long.MaxValue near p = 4.07M.
+    // The ANSI HOF form and DuckDB's BIGINT both raise here.
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.unsafe.types.UTF8String
+    val word = UTF8String.fromString(new String(Character.toChars(0x10FFFF)))
+    val arr = new GenericArrayData(Array.fill[Any](4100000)(word))
+    val fx = graft.functions.FingerprintX(Literal(null, ArrayType(StringType)))
+    intercept[ArithmeticException](fx.nullSafeEval(arr))
+  }
+
+  test("LangIdX rejects more languages than its 32-bit marker mask holds") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val langs = (0 until 33).map(i => (f"l$i%02d", Seq(s"m$i")))
+    intercept[IllegalArgumentException](
+      graft.functions.LangIdX(Literal(null, ArrayType(StringType)), langs))
+  }
 }
