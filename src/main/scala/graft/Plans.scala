@@ -68,12 +68,12 @@ object Plans {
       val data = (0L until 2000L).map(i =>
         (i, Seq.fill(24)(rnd.nextDouble() * 2 - 1))).toDF("vec_id", "embedding")
       val idx = java.nio.file.Files.createTempDirectory("graft-plans-annpfx").toString
-      ops.Similarity.buildIndexPrefixed(data, "vec_id", "embedding",
-        planes = 16, prefixBits = 8, idx)
+      val layout = ops.Similarity.Prefixed(planes = 16, prefixBits = 8)
+      ops.Similarity.build(data, "vec_id", "embedding", layout, idx)
       val q = data.where(col("vec_id") === 3L).select(col("embedding"))
         .head().getSeq[Double](0)
-      val df = ops.Similarity.annTopKIndexedPrefixed(spark, idx, q, k = 10,
-        planes = 16, prefixBits = 8, probeBits = 1)
+      val cands = ops.Similarity.candidates(ops.Similarity.open(spark, idx, layout), layout, q, probe = 1)
+      val df = ops.Similarity.topKCosine(cands, q, k = 10)
       sb.append("## ann planes=16 prefixed-index lookup (web-scale shape)\n\n")
       sb.append("partition pruning on the 8-bit bucket prefix (bounded 256 dirs at any\n")
       sb.append("plane count) + pushed bucket-IN filter for row-group skipping on the\n")

@@ -48,18 +48,22 @@ object SparkEntry {
   private def tempDir(prefix: String): java.nio.file.Path =
     java.nio.file.Files.createTempDirectory(stagingRoot, prefix)
 
-  /** File stream sources need a DIRECTORY: stage the single events parquet
-    * file into a temp dir, memoized per data dir — repeat callers (every
-    * e_stream_* query) reuse one staged copy instead of re-copying the file
-    * and leaking a fresh dir per query. */
+  /** File stream sources need a DIRECTORY: a directory-style events table
+    * is the source as-is; a single events parquet file is staged into a
+    * temp dir, memoized per data dir — repeat callers (every e_stream_*
+    * query) reuse one staged copy instead of re-copying the file and
+    * leaking a fresh dir per query. */
   private val stagedEventDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def stageEvents(dir: String): String =
-    stagedEventDirs.computeIfAbsent(dir, { _ =>
+  private def stageEvents(dir: String): String = {
+    val src = java.nio.file.Paths.get(s"$dir/events.parquet")
+    if (java.nio.file.Files.isDirectory(src)) src.toString
+    else if (!java.nio.file.Files.exists(src)) throw new java.io.FileNotFoundException(src.toString)
+    else stagedEventDirs.computeIfAbsent(dir, { _ =>
       val staged = tempDir("graft-stream-src")
-      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("events.parquet"))
+      java.nio.file.Files.copy(src, staged.resolve("events.parquet"))
       staged.toString
     })
+  }
 
   /** Scale-adaptive shuffle-partition count for the STREAMING queries.
     * Streaming plans get no AQE coalescing, and every shuffle partition of a
@@ -72,10 +76,14 @@ object SparkEntry {
     * over an MB-scale source and pure necessity at 10^5 partitions over a
     * 100 TB one). Target bytes/partition comes from conf
     * `graft.stream.bytesPerStatePartition` (default 32 MB). */
-  private def streamShufflePartitions(spark: SparkSession, dir: String): Int = {
+  private[graft] def streamShufflePartitions(spark: SparkSession, dir: String): Int = {
     val target = spark.conf.getOption("graft.stream.bytesPerStatePartition")
       .map(_.toLong).getOrElse(32L * 1024 * 1024)
-    val inputBytes = math.max(new java.io.File(s"$dir/events.parquet").length(), 1L)
+    // content length sums a directory-style table's files (File.length()
+    // of a directory is its inode size, a few KB)
+    val events = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
+    val inputBytes = math.max(events.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getContentSummary(events).getLength, 1L)
     val n = (inputBytes + target - 1) / target
     math.max(1L, math.min(n, 262144L)).toInt
   }
@@ -149,12 +157,12 @@ object SparkEntry {
   /** ANN index memoized PER PROCESS (fresh temp dir each JVM) — a /tmp path
     * keyed by the data dir would silently serve a STALE index if the
     * underlying table or the plane/scale formula ever changed between runs. */
-  private val annIndexes = new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
-  private def annIndex(spark: SparkSession, dir: String, planes: Int): String =
-    annIndexes.computeIfAbsent((dir, planes), { _ =>
+  private val annIndexes = new java.util.concurrent.ConcurrentHashMap[(String, Similarity.Flat), String]()
+  private def annIndex(spark: SparkSession, dir: String, layout: Similarity.Flat): String =
+    annIndexes.computeIfAbsent((dir, layout), { _ =>
       implicit val s: SparkSession = spark
-      val path = tempDir(s"graft-ann-index-p$planes-").toString
-      ops.Similarity.buildIndex(t(dir, "embeddings"), "vec_id", "embedding", planes, path)
+      val path = tempDir(s"graft-ann-index-p${layout.planes}-").toString
+      Similarity.build(t(dir, "embeddings"), "vec_id", "embedding", layout, path)
       path
     })
 
@@ -162,16 +170,16 @@ object SparkEntry {
     * training (k=8 cells, 2 iterations — the corpus is tiny; at scale k is
     * ~sqrt(corpus) and training runs on a hash-sample) + write-once
     * partitionBy(cell) index. Same staleness rationale as [[annIndexes]]. */
-  private val ivfIndexes = new java.util.concurrent.ConcurrentHashMap[String, (Array[Array[Long]], String)]()
-  private def ivfIndex(spark: SparkSession, dir: String): (Array[Array[Long]], String) =
+  private val ivfIndexes = new java.util.concurrent.ConcurrentHashMap[String, (Similarity.Ivf, String)]()
+  private def ivfIndex(spark: SparkSession, dir: String): (Similarity.Ivf, String) =
     ivfIndexes.computeIfAbsent(dir, { _ =>
       implicit val s: SparkSession = spark
       val emb = t(dir, "embeddings")
-      val centroids = ops.Similarity.trainIvfCentroids(emb, "vec_id", "embedding",
-        k = 8, iters = 2)
+      val layout = Similarity.Ivf(Similarity.trainIvfCentroids(emb, "vec_id", "embedding",
+        k = 8, iters = 2))
       val path = tempDir("graft-ivf-index-").toString
-      ops.Similarity.buildIndexIvf(emb, "vec_id", "embedding", centroids, path)
-      (centroids, path)
+      Similarity.build(emb, "vec_id", "embedding", layout, path)
+      (layout, path)
     })
 
   /** ValidationSuite over the documents table (the reference's keyword set
@@ -1347,25 +1355,17 @@ object SparkEntry {
       // (partition pruning — at real scale planes is 16+, so probing covers
       // ~0.2% of the corpus; 6 planes here because the test corpus is tiny).
       implicit val s: SparkSession = spark
-      import graft.functions.{ScaledIntDot, SignBucket}
-      val planes = 6; val probeBits = 2
+      val layout = Similarity.Flat(planes = 6)
       val emb = t(dir, "embeddings")
-      val idx = annIndex(spark, dir, planes)
+      val idx = annIndex(spark, dir, layout)
       val qd = emb.where(col("vec_id") === 1)
         .select(col("embedding").cast(ArrayType(DoubleType))).head().getSeq[Double](0)
-      val buckets = SignBucket.probeBuckets(SignBucket.compute(qd.toArray, planes),
-        planes, probeBits)
-      val qlit = array(qd.map(v => lit(SignBucket.scaleComponent(v))): _*)
       // the index stores the int64-scaled vector (`sv`, written once by the
       // codegen'd ScaleVec at build time), so the lookup projection is pure
-      // ScaledIntDot — genuinely no HOF anywhere in the read path
-      val dot = ScaledIntDot(col("sv"), qlit)
-      // openIndex validates the stored family/planes metadata before probing
-      Similarity.openIndex(spark, idx, planes)
-        .where(col("bucket").isin(buckets: _*))
-        .select(col("id").as("vec_id"), dot.as("dot_scaled"))
-        .orderBy(desc("dot_scaled"), col("vec_id"))
-        .limit(10)
+      // ScaledIntDot — genuinely no HOF anywhere in the read path; open
+      // validates the stored family/planes metadata before probing
+      val cands = Similarity.candidates(Similarity.open(spark, idx, layout), layout, qd, probe = 2)
+      Similarity.topKDot(cands, qd, 10).select(col("id").as("vec_id"), col("dot_scaled"))
     }),
 
     "s_ann_recall" -> ((spark, dir) => {
@@ -1376,10 +1376,9 @@ object SparkEntry {
       // The whole measurement is SQL-expressible, so the oracle re-derives
       // buckets, candidate sets, BOTH rankings, and the hit counts.
       implicit val s: SparkSession = spark
-      import graft.functions.{ScaledIntDot, SignBucket}
-      val planes = 6; val probeBits = 2
+      val layout = Similarity.Flat(planes = 6)
       val emb = t(dir, "embeddings")
-      val idx = annIndex(spark, dir, planes)
+      val idx = annIndex(spark, dir, layout)
       // ONE driver collect for all three probe vectors (3 bounded rows) and
       // ONE metadata-validated index relation shared by all six subplans —
       // the per-qid head() loop was 3 sequential driver jobs plus 6 parquet
@@ -1389,16 +1388,12 @@ object SparkEntry {
       val qvecs = emb.where(col("vec_id").isin(1L, 5L, 9L))
         .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)))
         .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-      val idxRel = Similarity.openIndex(spark, idx, planes)
+      val idxRel = Similarity.open(spark, idx, layout)
       val per = Seq(1L, 5L, 9L).map { qid =>
         val qd = qvecs(qid)
-        val buckets = SignBucket.probeBuckets(SignBucket.compute(qd.toArray, planes),
-          planes, probeBits)
-        val qlit = array(qd.map(v => lit(SignBucket.scaleComponent(v))): _*)
-        def top10(rel: DataFrame) = rel
-          .select(col("id").as("vec_id"), ScaledIntDot(col("sv"), qlit).as("d"))
-          .orderBy(desc("d"), col("vec_id")).limit(10).select("vec_id")
-        val lsh10 = top10(idxRel.where(col("bucket").isin(buckets: _*)))
+        def top10(rel: DataFrame) =
+          Similarity.topKDot(rel, qd, 10).select(col("id").as("vec_id"))
+        val lsh10 = top10(Similarity.candidates(idxRel, layout, qd, probe = 2))
         val full10 = top10(idxRel)
         full10.join(lsh10, Seq("vec_id"), "left_semi")
           .agg(count(lit(1)).cast(LongType).as("hits"))
@@ -1419,12 +1414,12 @@ object SparkEntry {
       // (at real scale k ~ sqrt(corpus), so nprobe/k is the read fraction —
       // the cells adapt to data density, the property LSH planes lack).
       implicit val s: SparkSession = spark
-      val (centroids, idx) = ivfIndex(spark, dir)
+      val (layout, idx) = ivfIndex(spark, dir)
       val emb = t(dir, "embeddings")
       val qd = emb.where(col("vec_id") === 2)
         .select(col("embedding").cast(ArrayType(DoubleType))).head().getSeq[Double](0)
-      Similarity.annTopKIvf(Similarity.openIndexIvf(spark, idx, centroids),
-          centroids, qd, 10, nprobe = 2)
+      val cands = Similarity.candidates(Similarity.open(spark, idx, layout), layout, qd, probe = 2)
+      Similarity.topKDot(cands, qd, 10)
         .select(col("id").as("vec_id"), col("cell").cast(LongType).as("cell"),
           col("dot_scaled"))
     }),
@@ -1439,20 +1434,19 @@ object SparkEntry {
       implicit val s: SparkSession = spark
       import spark.implicits._
       import graft.functions.{ScaledIntDot, SignBucket}
-      val planes = 6; val probeBits = 1
+      val layout = Similarity.Flat(planes = 6)
       val emb = t(dir, "embeddings")
-      val idx = annIndex(spark, dir, planes)
+      val idx = annIndex(spark, dir, layout)
       val qs = emb.where(col("vec_id") < 5)
         .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)))
         .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+        .map(r => (r.getLong(0), r.getSeq[Double](1)))
       val probes = qs.toSeq.flatMap { case (qid, qv) =>
-        val bucket = SignBucket.compute(qv, planes)
-        val qscaled = qv.map(SignBucket.scaleComponent).toSeq
-        SignBucket.probeBuckets(bucket, planes, probeBits).map(b => (qid, b, qscaled))
+        val qscaled = qv.map(SignBucket.scaleComponent)
+        layout.buckets(qv, probe = 1).map(b => (qid, b, qscaled))
       }.toDF("q_id", "bucket", "qscaled")
       val dot = ScaledIntDot(col("sv"), col("qscaled")) // sv pre-scaled at index build
-      val cand = Similarity.openIndex(spark, idx, planes).join(broadcast(probes), "bucket")
+      val cand = Similarity.open(spark, idx, layout).join(broadcast(probes), "bucket")
         .select(col("q_id"), col("id").as("vec_id"), dot.as("dot_scaled"))
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("q_id").orderBy(desc("dot_scaled"), col("vec_id"))

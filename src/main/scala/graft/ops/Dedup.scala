@@ -260,8 +260,9 @@ object Dedup {
     (labels, iter)
   }
 
-  /** Embedding-cosine near-duplicates: brute within LSH sign buckets. See
-    * Similarity.annLsh for the bucketing; this applies a distance cutoff.
+  /** Embedding-cosine near-duplicates: brute within LSH sign buckets (the
+    * Similarity.signBucket keys of a Similarity.Flat index); this applies a
+    * distance cutoff.
     * The scaled vector + squared norm are computed ONCE per row (codegen'd
     * ScaleVec/ScaledIntDot), so the pair stage — which evaluates every
     * same-bucket candidate — is pure ScaledIntDot + arithmetic inside

@@ -1,31 +1,35 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.{NearestCell, ScaledIntDot, ScaleVec, SignBucket}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /**
- * Similarity search over embedding columns (Array[Float]).
+ * Similarity search over embedding columns (Array[Float]), all in the
+ * int64-scaled vector domain (`sv` = round(x*1e7), codegen'd ScaleVec) with
+ * exact ScaledIntDot ranking — no interpreted lambda in any projection.
  *
- * Baseline: brute-force cosine top-k — one map-side pass + TakeOrdered (no
- * shuffle of the corpus; the query vector travels as a plan literal, the
- * distributed analogue of a broadcast).
+ * One ANN index path, the layout as data: a [[Layout]] (flat LSH buckets,
+ * prefix-partitioned LSH buckets, or IVF k-means cells) says which key
+ * columns an index carries, how rows are shaped before the write, which
+ * metadata describe it and which predicate probes it. [[build]] is the one
+ * writer, [[open]] the one metadata-validated reader, and
+ * [[candidates]] → [[topKDot]] / [[topKCosine]] the one probe → rank path.
+ * Brute force is `topKCosine(scaled(df, id, vec), query, k)`.
  *
- * Scale path: random-hyperplane LSH sign buckets; candidates are restricted to
- * the query's bucket (or multi-probe neighbors), turning an all-pairs scan into
- * a bucket-pruned one. Hyperplane weights come from the integer
- * SignBucket.planeWeight hash of (plane, dim), so every executor materializes
- * identical planes with no driver state.
+ * LSH sign buckets come from the integer SignBucket.planeWeight hash of
+ * (plane, dim), so every executor materializes identical planes with no
+ * driver state; IVF centroids are trained by exact-integer Lloyd k-means.
  */
 object Similarity {
 
   // ---- index self-description (round-4 verdict #4) -------------------------
-  // Every persisted ANN index carries a `_graft_index_meta.json` (written at
-  // build, `_`-prefixed so parquet readers ignore it) recording the family
-  // and geometry it was built with. Every PATH-based lookup entry point
-  // validates it: probing a planes=16 index with planes=13 would otherwise
-  // silently read the WRONG partitions and return wrong neighbors — the
-  // mismatch must throw, never degrade.
+  // Every persisted ANN index carries a `_graft_index_meta.json` (written by
+  // build, `_`-prefixed so parquet readers ignore it) recording its layout's
+  // meta fields. `open` validates them: probing a planes=16 index with
+  // planes=13 would otherwise silently read the WRONG partitions and return
+  // wrong neighbors — the mismatch must throw, never degrade.
 
   /** Version tag of the scaled-integer vector domain (`sv` = round(x*1e7))
     * the indexes store; bumped if the scaling ever changes. */
@@ -33,8 +37,102 @@ object Similarity {
   private final val MetaFileName = "_graft_index_meta.json"
   private def jstr(s: String): String = "\"" + s + "\""
 
+  /**
+   * Physical layout of a persisted ANN index. Each case carries everything
+   * the writer and the reader must agree on, so they cannot disagree:
+   *   - `meta`: the fields [[build]] writes and [[open]] checks (values in
+   *     serialized JSON form; `family` first, so a wrong layout names it);
+   *   - `keys`: the key columns stored beside `id, sv, n2`, in dependency
+   *     order, computed from the row's `vec` (array<double>) or `sv`;
+   *   - `partitionCol`: the key the index directories are partitioned by;
+   *   - `shape`: the pre-write repartition/sort;
+   *   - `probe`: the candidate predicate for a query vector.
+   */
+  sealed trait Layout {
+    protected def family: String
+    protected def geometry: Seq[(String, String)]
+    final def meta: Seq[(String, String)] =
+      ("family" -> jstr(family)) +: geometry :+ ("scale" -> jstr(ScaleVersion))
+    def keys: Seq[(String, Column)]
+    def partitionCol: String
+    def shape(df: DataFrame): DataFrame
+    def probe(query: Seq[Double], probe: Int): Column
+  }
+
+  /** Flat LSH index: partitionBy(bucket), 2^planes directories — the
+    * SMALL-plane-count form. A lookup reads only the query's bucket and its
+    * Hamming-<=probe neighbors (partition pruning). */
+  final case class Flat(planes: Int) extends Layout {
+    protected def family = "lsh_flat"
+    protected def geometry = Seq("planes" -> planes.toString)
+    def keys = Seq("bucket" -> SignBucket(col("vec"), planes))
+    def partitionCol = "bucket"
+    // NO pre-write repartition here, deliberately (round-6 measured both):
+    // adding repartition(bucket) — the Ivf/Prefixed shape — cost +0.45 s at
+    // bench scale because the input is a single scan task (8 MB splits) and
+    // AQE coalesces the tiny shuffle back to one writer anyway, making it
+    // pure shuffle overhead. A cluster-scale caller with many scan tasks
+    // should repartition by bucket before building, or use Prefixed, whose
+    // writer repartition is load-bearing (task x 2^16 files otherwise).
+    def shape(df: DataFrame): DataFrame = df
+    def probe(query: Seq[Double], probe: Int): Column =
+      col("bucket").isin(buckets(query, probe): _*)
+    /** The query's bucket plus all buckets within Hamming distance <= probe. */
+    def buckets(query: Seq[Double], probe: Int): Seq[Long] =
+      SignBucket.probeBuckets(SignBucket.compute(query.toArray, planes), planes, probe)
+  }
+
+  /** Prefix-partitioned LSH index for HIGH plane counts (planes >= ~13):
+    * flat partitionBy(bucket) would create up to 2^planes directories of
+    * tiny files (65536 dirs at planes=16). Here the partition column `part`
+    * is the TOP `prefixBits` bits of the bucket (2^prefixBits directories,
+    * bounded regardless of planes) and rows are sorted by bucket within each
+    * partition, so a lookup combines partition pruning on `part` with a
+    * pushed `bucket IN (...)` parquet filter (row-group min/max skipping). */
+  final case class Prefixed(planes: Int, prefixBits: Int) extends Layout {
+    // a prefixBits > planes would make `shift` negative, and Long >>> negative
+    // shifts by (shift & 63) — silently probing the WRONG partitions
+    require(prefixBits > 0 && prefixBits <= planes, "need 0 < prefixBits <= planes")
+    private def shift = planes - prefixBits
+    protected def family = "lsh_prefixed"
+    protected def geometry = Seq("planes" -> planes.toString, "prefix_bits" -> prefixBits.toString)
+    def keys = Seq("bucket" -> SignBucket(col("vec"), planes),
+      "part" -> shiftrightunsigned(col("bucket"), shift))
+    def partitionCol = "part"
+    def shape(df: DataFrame): DataFrame = df
+      .repartition(col("part"))             // one writer task per prefix dir
+      .sortWithinPartitions("part", "bucket") // row-group min/max on bucket
+    def probe(query: Seq[Double], probe: Int): Column = {
+      val buckets = Flat(planes).buckets(query, probe)
+      col("part").isin(buckets.map(_ >>> shift).distinct: _*) && col("bucket").isin(buckets: _*)
+    }
+  }
+
+  /** IVF index: partitionBy(cell) over k-means cells ([[trainIvfCentroids]]),
+    * k directories whose occupancy adapts to the data instead of to plane
+    * luck. A lookup probes the query's `nprobe` nearest cells, computed on
+    * the driver (k integer distances). The centroid digest pins the matrix
+    * the cells were assigned with. */
+  final case class Ivf(centroids: Array[Array[Long]]) extends Layout {
+    protected def family = "ivf"
+    protected def geometry = Seq("cells" -> centroids.length.toString,
+      "centroids_digest" -> jstr(centroidsDigest(centroids)))
+    def keys = Seq("cell" -> NearestCell(col("sv"), centroids))
+    def partitionCol = "cell"
+    // one writer task per cell dir: file count = k cells, not tasks x cells
+    // (the smoke bench measured the unpartitioned write at ~2k tiny files
+    // and 2x the build time)
+    def shape(df: DataFrame): DataFrame = df.repartition(col("cell"))
+    def probe(query: Seq[Double], nprobe: Int): Column = {
+      require(nprobe > 0 && nprobe <= centroids.length, "need 0 < nprobe <= cells")
+      val cells = NearestCell.cellDistances(query.map(SignBucket.scaleComponent).toArray, centroids)
+        .zipWithIndex.sortBy { case (d2, c) => (d2, c) }.take(nprobe).map(_._2)
+      col("cell").isin(cells.map(Int.box): _*)
+    }
+  }
+
   /** Order- and content-sensitive digest of a centroid matrix. */
-  def centroidsDigest(centroids: Array[Array[Long]]): String = {
+  private def centroidsDigest(centroids: Array[Array[Long]]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val buf = new Array[Byte](8)
     centroids.foreach { row =>
@@ -48,233 +146,129 @@ object Similarity {
     md.digest().map(b => f"$b%02x").mkString
   }
 
-  private def metaPath(path: String) = new org.apache.hadoop.fs.Path(path, MetaFileName)
+  /** LSH sign bucket: one bit per hyperplane = sign of <scaled(vec), plane>.
+    * Codegen'd custom expression, exact-integer arithmetic (plane weights and
+    * int64-scaled components — SQL-oracle-reproducible, no float sign
+    * boundary nondeterminism). */
+  def signBucket(vec: Column, planes: Int): Column = SignBucket(vec, planes)
 
-  private def writeIndexMeta(spark: org.apache.spark.sql.SparkSession, path: String,
-                             fields: Seq[(String, String)]): Unit = {
-    val json = fields.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
-    val hp = metaPath(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(hp, true)
-    try out.write((json + "\n").getBytes("UTF-8")) finally out.close()
+  /** (id, vec, sv, n2): the double vector, its int64-scaled form and squared
+    * norm. Two-step projection so `sv` is computed once and reused. */
+  private def withScaled(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol).as("id"), col(vecCol).cast(ArrayType(DoubleType)).as("vec"))
+      .withColumn("sv", ScaleVec(col("vec")))
+      .withColumn("n2", ScaledIntDot(col("sv"), col("sv")))
+
+  /** (id, sv, n2) of a raw corpus: the codegen'd ScaleVec/ScaledIntDot
+    * projection every ranking reads. */
+  def scaled(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    withScaled(df, idCol, vecCol).drop("vec")
+
+  /**
+   * Persist an ANN index: `id, sv, n2` plus the layout's key columns, the
+   * keys computed ONCE (codegen'd expressions) and the rows written
+   * partitionBy(layout.partitionCol), so a lookup is a partition-pruned
+   * scan of the probed directories only — the write-once/read-many shape.
+   * The stored scaled vector and norm keep every read projection pure
+   * ScaledIntDot + arithmetic. Writes the layout's metadata file last.
+   */
+  def build(df: DataFrame, idCol: String, vecCol: String, layout: Layout, path: String): Unit = {
+    val keyed = layout.keys.foldLeft(withScaled(df, idCol, vecCol)) {
+      case (d, (name, key)) => d.withColumn(name, key)
+    }
+    layout.shape(keyed.drop("vec"))
+      .write.mode("overwrite").partitionBy(layout.partitionCol).parquet(path)
+    val json = layout.meta.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}\n")
+    val hp = new org.apache.hadoop.fs.Path(path, MetaFileName)
+    val out = hp.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).create(hp, true)
+    try out.write(json.getBytes("UTF-8")) finally out.close()
   }
 
-  /** Validate a stored index's metadata against what the caller is about to
-    * probe with; absent or mismatching metadata throws (never probes). The
-    * expected values are compared in their serialized JSON form. */
-  private def requireIndexMeta(spark: org.apache.spark.sql.SparkSession, path: String,
-                               expect: Seq[(String, String)]): Unit = {
-    val hp = metaPath(path)
+  /** The index at `path` as a relation, after checking its metadata against
+    * `layout`: absent or mismatching metadata throws (never probes). Open
+    * once and reuse across lookups — re-resolving the parquet relation per
+    * lookup pays partition discovery + analysis every call (measured ~0.8 s
+    * of driver overhead per query at 256 partitions). */
+  def open(spark: SparkSession, path: String, layout: Layout): DataFrame = {
+    val hp = new org.apache.hadoop.fs.Path(path, MetaFileName)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(hp)) throw new IllegalArgumentException(
       s"ANN index at $path has no $MetaFileName — (re)build it with " +
-        "buildIndex/buildIndexPrefixed/buildIndexIvf; refusing to guess its geometry")
+        "Similarity.build; refusing to guess its geometry")
     val in = fs.open(hp)
-    val text = try {
-      val bos = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-      new String(bos.toByteArray, "UTF-8")
-    } finally in.close()
+    val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
     val obj = graft.json.Json.parse(text) match {
       case o: graft.json.JObj => o
       case other => throw new IllegalArgumentException(
         s"ANN index metadata at $hp is not a JSON object: ${other.typeName}")
     }
-    expect.foreach { case (k, want) =>
+    layout.meta.foreach { case (k, want) =>
       val got = obj.get(k).map(graft.json.Json.render).getOrElse("<absent>")
       if (got != want) throw new IllegalArgumentException(
         s"ANN index at $path was built with $k=$got but this lookup expects $k=$want — " +
           "a silent mismatch would probe the wrong partitions and return wrong " +
           "neighbors; rebuild the index or fix the caller")
     }
-  }
-
-  /** Validated loader for a [[buildIndex]] (flat bucket-partitioned) index:
-    * checks family/planes/scale metadata once, returns the relation for
-    * reuse across lookups (the serving shape — per-call relation resolution
-    * pays partition discovery every call). */
-  def openIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                planes: Int): DataFrame = {
-    requireIndexMeta(spark, path, Seq(
-      "family" -> jstr("lsh_flat"), "planes" -> planes.toString,
-      "scale" -> jstr(ScaleVersion)))
     spark.read.parquet(path)
   }
 
-  /** Validated loader for a [[buildIndexPrefixed]] index. */
-  def openIndexPrefixed(spark: org.apache.spark.sql.SparkSession, path: String,
-                        planes: Int, prefixBits: Int): DataFrame = {
-    requireIndexMeta(spark, path, Seq(
-      "family" -> jstr("lsh_prefixed"), "planes" -> planes.toString,
-      "prefix_bits" -> prefixBits.toString, "scale" -> jstr(ScaleVersion)))
-    spark.read.parquet(path)
+  /** The rows of an [[open]]ed index the layout's probe keeps for `query`
+    * (PartitionFilters on the partition column; verify with .explain). */
+  def candidates(index: DataFrame, layout: Layout, query: Seq[Double], probe: Int): DataFrame =
+    index.where(layout.probe(query, probe))
+
+  /** Exact top-k of `cands` (`id, sv` + carried columns) by scaled-integer
+    * dot with `query`: the carried columns, then `dot_scaled`. */
+  def topKDot(cands: DataFrame, query: Seq[Double], k: Int): DataFrame =
+    rank(cands, "dot_scaled", ScaledIntDot(col("sv"), scaledLit(query)), k)
+
+  /** Exact top-k of `cands` (`id, sv, n2` + carried columns) by cosine with
+    * `query`: the carried columns, then `cosine`. */
+  def topKCosine(cands: DataFrame, query: Seq[Double], k: Int): DataFrame = {
+    val qNorm = math.sqrt(query.map(SignBucket.scaleComponent).map(x => x.toDouble * x).sum)
+    rank(cands, "cosine", ScaledIntDot(col("sv"), scaledLit(query)).cast(DoubleType) /
+      (sqrt(col("n2").cast(DoubleType)) * lit(qNorm)), k)
   }
 
-  /** Validated loader for a [[buildIndexIvf]] index: the caller's centroid
-    * matrix must DIGEST-match the one the index was assigned with — probing
-    * cells from different centroids returns silently wrong neighbors. */
-  def openIndexIvf(spark: org.apache.spark.sql.SparkSession, path: String,
-                   centroids: Array[Array[Long]]): DataFrame = {
-    requireIndexMeta(spark, path, Seq(
-      "family" -> jstr("ivf"), "cells" -> centroids.length.toString,
-      "centroids_digest" -> jstr(centroidsDigest(centroids)),
-      "scale" -> jstr(ScaleVersion)))
-    spark.read.parquet(path)
-  }
+  private def scaledLit(query: Seq[Double]): Column =
+    array(query.map(v => lit(SignBucket.scaleComponent(v))): _*)
 
-  /** Codegen'd scaled-integer cosine of the corpus column `vecCol` against a
-    * literal query: shared by the brute-force and scan-time ANN baselines so
-    * neither carries an interpreted lambda in its hot projection. Two-step
-    * select: `__sv` is computed once, then dot and self-dot reuse it (WSCG
-    * subexpression elimination keeps it single-evaluation). */
-  private def scaledCosineTopK(df: DataFrame, idCol: String, vecCol: String,
-                               query: Seq[Double], k: Int): DataFrame = {
-    import graft.functions.{ScaledIntDot, ScaleVec, SignBucket}
-    val qScaled = query.map(SignBucket.scaleComponent)
-    val qNorm = math.sqrt(qScaled.map(x => x.toDouble * x).sum)
-    val qlit = array(qScaled.map(lit(_)): _*)
-    df.select(col(idCol), ScaleVec(col(vecCol).cast(ArrayType(DoubleType))).as("__sv"))
-      .select(col(idCol),
-        (ScaledIntDot(col("__sv"), qlit).cast(DoubleType) /
-          (sqrt(ScaledIntDot(col("__sv"), col("__sv")).cast(DoubleType)) * lit(qNorm)))
-          .as("cosine"))
-      .orderBy(desc("cosine"), col(idCol))
-      .limit(k)
-  }
+  /** Projects away the vector columns (`id` and the layout keys ride along)
+    * and keeps the k best by `score`, ties by id. */
+  private def rank(cands: DataFrame, name: String, score: Column, k: Int): DataFrame =
+    cands.select(cands.columns.filterNot(Set("sv", "n2")).map(col).toSeq :+ score.as(name): _*)
+      .orderBy(desc(name), col("id")).limit(k)
 
-  /** LSH sign bucket: one bit per hyperplane = sign of <scaled(vec), plane>.
-    * Codegen'd custom expression, exact-integer arithmetic (plane weights and
-    * int64-scaled components — SQL-oracle-reproducible, no float sign
-    * boundary nondeterminism). */
-  def signBucket(vec: Column, planes: Int): Column =
-    graft.functions.SignBucket(vec, planes)
+  // ---- fixed-signature forms of the prefixed and IVF paths, as graft.Bench
+  // calls them (its call sites do not change) -------------------------------
 
-  /** Brute-force cosine top-k against a literal query vector — codegen'd
-    * ScaleVec/ScaledIntDot end to end (no lambdafunction in the executed
-    * plan; PlanAuditSpec asserts it). */
-  def bruteForceTopK(df: DataFrame, idCol: String, vecCol: String,
-                     query: Seq[Float], k: Int): DataFrame =
-    scaledCosineTopK(df, idCol, vecCol, query.map(_.toDouble), k)
-
-  /** IVF-style ANN without a persisted index: scan-time bucket filter, then
-    * exact cosine + top-k within the pruned set. One full pass per query —
-    * use [[buildIndex]] + [[annTopKIndexed]] for repeated lookups at scale.
-    * Bucket + cosine are both codegen'd (SignBucket, ScaledIntDot). */
-  def annTopK(df: DataFrame, idCol: String, vecCol: String,
-              query: Seq[Float], k: Int, planes: Int = 6): DataFrame = {
-    val qd = query.map(_.toDouble)
-    val qBucket = graft.functions.SignBucket.compute(qd.toArray, planes)
-    val pruned = df
-      .withColumn("__bucket", signBucket(col(vecCol).cast(ArrayType(DoubleType)), planes))
-      .where(col("__bucket") === qBucket)
-    scaledCosineTopK(pruned, idCol, vecCol, qd, k)
-  }
-
-  /**
-   * Persist the ANN index: bucket computed ONCE (codegen'd expression),
-   * written partitionBy(bucket) so a lookup is a partition-pruned scan of
-   * the probed buckets only — never the full corpus. At 100 TB this is the
-   * write-once/read-many shape: the per-query cost is O(corpus / 2^planes ×
-   * probed buckets), not O(corpus).
-   *
-   * Alongside the raw vector the index stores the int64-SCALED vector (`sv`)
-   * and its squared norm (`n2`), both from codegen'd expressions, so lookup
-   * projections are pure ScaledIntDot + arithmetic — NO higher-order function
-   * (CodegenFallback) ever appears in the read path.
-   */
-  def buildIndex(df: DataFrame, idCol: String, vecCol: String,
-                 planes: Int, path: String): Unit = {
-    import graft.functions.{ScaledIntDot, ScaleVec}
-    df.select(col(idCol).as("id"), col(vecCol).cast(ArrayType(DoubleType)).as("vec"))
-      .withColumn("sv", ScaleVec(col("vec")))
-      .withColumn("n2", ScaledIntDot(col("sv"), col("sv")))
-      .withColumn("bucket", signBucket(col("vec"), planes))
-      // NO pre-write repartition here, deliberately (round-6 measured both):
-      // adding repartition(bucket) — the buildIndexIvf/buildIndexPrefixed
-      // shape — cost +0.45 s at bench scale because the input is a single
-      // scan task (8 MB splits) and AQE coalesces the tiny shuffle back to
-      // one writer anyway, making it pure shuffle overhead. The flat index
-      // is the SMALL-plane-count form (2^planes dirs, bench planes=6); a
-      // cluster-scale caller with many scan tasks should repartition by
-      // bucket before building, or use buildIndexPrefixed, whose writer
-      // repartition is load-bearing (task x 2^16 files otherwise).
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    writeIndexMeta(df.sparkSession, path, Seq(
-      "family" -> jstr("lsh_flat"), "planes" -> planes.toString,
-      "scale" -> jstr(ScaleVersion)))
-  }
-
-  /**
-   * Prefix-partitioned ANN index for HIGH plane counts (planes >= ~13):
-   * flat partitionBy(bucket) would create up to 2^planes directories of tiny
-   * files — a filesystem-metadata explosion at planes=16 (65536 dirs). Here
-   * the partition column is the TOP `prefixBits` bits of the bucket
-   * (2^prefixBits directories, bounded regardless of planes) and rows are
-   * sorted by bucket within each partition, so the lookup combines
-   * partition pruning on `part` with a pushed `bucket IN (...)` parquet
-   * filter (row-group min/max skipping on the sorted column). Per-lookup
-   * data read: the probed prefix partitions (<= probeBits x prefixBits + 1
-   * of 2^prefixBits dirs); candidate rows: corpus x probeSet/2^planes.
-   */
   def buildIndexPrefixed(df: DataFrame, idCol: String, vecCol: String,
-                         planes: Int, prefixBits: Int, path: String): Unit = {
-    import graft.functions.{ScaledIntDot, ScaleVec}
-    val shift = planes - prefixBits
-    require(prefixBits > 0 && shift >= 0, "need 0 < prefixBits <= planes")
-    df.select(col(idCol).as("id"), col(vecCol).cast(ArrayType(DoubleType)).as("vec"))
-      .withColumn("sv", ScaleVec(col("vec")))
-      .withColumn("n2", ScaledIntDot(col("sv"), col("sv")))
-      .withColumn("bucket", signBucket(col("vec"), planes))
-      .withColumn("part", shiftrightunsigned(col("bucket"), shift))
-      .repartition(col("part"))            // one writer task per prefix dir
-      .sortWithinPartitions("part", "bucket") // row-group min/max on bucket
-      .write.mode("overwrite").partitionBy("part").parquet(path)
-    writeIndexMeta(df.sparkSession, path, Seq(
-      "family" -> jstr("lsh_prefixed"), "planes" -> planes.toString,
-      "prefix_bits" -> prefixBits.toString, "scale" -> jstr(ScaleVersion)))
-  }
+                         planes: Int, prefixBits: Int, path: String): Unit =
+    build(df, idCol, vecCol, Prefixed(planes, prefixBits), path)
 
-  /** Multi-probe lookup against a [[buildIndexPrefixed]] table: partition
-    * pruning on the bucket prefix + pushed bucket-IN filter inside the
-    * probed partitions. Same HOF-free cosine projection as
-    * [[annTopKIndexed]]. */
-  def annTopKIndexedPrefixed(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                             query: Seq[Double], k: Int, planes: Int, prefixBits: Int,
-                             probeBits: Int = 1): DataFrame =
-    annTopKIndexedPrefixed(openIndexPrefixed(spark, indexPath, planes, prefixBits),
-      query, k, planes, prefixBits, probeBits)
+  def openIndexPrefixed(spark: SparkSession, path: String,
+                        planes: Int, prefixBits: Int): DataFrame =
+    open(spark, path, Prefixed(planes, prefixBits))
 
-  /** Serving-path form of [[annTopKIndexedPrefixed]]: the index RELATION is
-    * loaded once and reused across queries — re-resolving the parquet
-    * relation per lookup pays partition discovery + analysis every call
-    * (measured ~0.8 s of pure driver overhead per query at 256 partitions),
-    * which dwarfs the pruned scan itself. */
+  /** (id, cosine) top-k of an opened prefixed index. */
   def annTopKIndexedPrefixed(index: DataFrame, query: Seq[Double], k: Int,
                              planes: Int, prefixBits: Int,
-                             probeBits: Int): DataFrame = {
-    import graft.functions.{ScaledIntDot, SignBucket}
-    // mirror the builder's invariant: a mismatched prefixBits would make
-    // `shift` negative and Long >>> negative shifts by (shift & 63) —
-    // silently probing the WRONG partitions instead of failing loudly
-    require(prefixBits > 0 && prefixBits <= planes, "need 0 < prefixBits <= planes")
-    val shift = planes - prefixBits
-    val qBucket = SignBucket.compute(query.toArray, planes)
-    val buckets = SignBucket.probeBuckets(qBucket, planes, probeBits)
-    val parts = buckets.map(_ >>> shift).distinct
-    val qScaled = query.map(SignBucket.scaleComponent)
-    val qNorm = math.sqrt(qScaled.map(x => x.toDouble * x).sum)
-    val qlit = array(qScaled.map(lit(_)): _*)
-    val dot = ScaledIntDot(col("sv"), qlit)
-    index
-      .where(col("part").isin(parts: _*) && col("bucket").isin(buckets: _*))
-      .select(col("id"),
-        (dot.cast(DoubleType) / (sqrt(col("n2").cast(DoubleType)) * lit(qNorm)))
-          .as("cosine"))
-      .orderBy(desc("cosine"), col("id"))
-      .limit(k)
-  }
+                             probeBits: Int): DataFrame =
+    topKCosine(candidates(index, Prefixed(planes, prefixBits), query, probeBits), query, k)
+      .select("id", "cosine")
+
+  def buildIndexIvf(df: DataFrame, idCol: String, vecCol: String,
+                    centroids: Array[Array[Long]], path: String): Unit =
+    build(df, idCol, vecCol, Ivf(centroids), path)
+
+  def openIndexIvf(spark: SparkSession, path: String,
+                   centroids: Array[Array[Long]]): DataFrame =
+    open(spark, path, Ivf(centroids))
+
+  /** (id, cell, dot_scaled) top-k of an opened IVF index. */
+  def annTopKIvf(index: DataFrame, centroids: Array[Array[Long]],
+                 query: Seq[Double], k: Int, nprobe: Int): DataFrame =
+    topKDot(candidates(index, Ivf(centroids), query, nprobe), query, k)
 
   // ---- IVF (inverted-file) ANN: k-means cells instead of hyperplane signs ----
 
@@ -308,7 +302,6 @@ object Similarity {
    */
   def trainIvfCentroids(df: DataFrame, idCol: String, vecCol: String,
                         k: Int, iters: Int, sampleMod: Int = 1): Array[Array[Long]] = {
-    import graft.functions.{NearestCell, ScaleVec}
     require(k > 0 && iters >= 0 && sampleMod >= 1, "need k > 0, iters >= 0, sampleMod >= 1")
     // null embeddings carry no position: drop them up front (a null sv row
     // would otherwise surface as an opaque NPE in the seed collect /
@@ -352,80 +345,5 @@ object Similarity {
       }
       centroids
     } finally { train.unpersist(false); () }
-  }
-
-  /** Persist the IVF index: cell assigned ONCE against the final centroids
-    * (codegen'd NearestCell), written partitionBy(cell) with the scaled
-    * vector + squared norm — the same write-once/read-many, HOF-free read
-    * shape as [[buildIndex]], with k cells instead of 2^planes buckets
-    * (cells adapt to the data distribution; bucket occupancy is balanced by
-    * construction instead of by plane luck). */
-  def buildIndexIvf(df: DataFrame, idCol: String, vecCol: String,
-                    centroids: Array[Array[Long]], path: String): Unit = {
-    import graft.functions.{NearestCell, ScaledIntDot, ScaleVec}
-    df.select(col(idCol).as("id"), col(vecCol).cast(ArrayType(DoubleType)).as("vec"))
-      .withColumn("sv", ScaleVec(col("vec")))
-      .withColumn("n2", ScaledIntDot(col("sv"), col("sv")))
-      .withColumn("cell", NearestCell(col("sv"), centroids))
-      .repartition(col("cell")) // one writer task per cell dir: file count =
-      // k cells, not tasks x cells (the smoke bench measured the unpartitioned
-      // write at ~2k tiny files and 2x the build time)
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
-    writeIndexMeta(df.sparkSession, path, Seq(
-      "family" -> jstr("ivf"), "cells" -> centroids.length.toString,
-      "dim" -> centroids.headOption.map(_.length).getOrElse(0).toString,
-      "centroids_digest" -> jstr(centroidsDigest(centroids)),
-      "scale" -> jstr(ScaleVersion)))
-  }
-
-  /** IVF lookup: the query's `nprobe` nearest cells are computed on the
-    * driver (k integer distances), the scan partition-prunes to those cell
-    * directories, and the top-k is the exact scaled-integer dot within the
-    * probed candidates — pure ScaledIntDot, no HOF in the read path.
-    * Returns (id, cell, dot_scaled). */
-  def annTopKIvf(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                 centroids: Array[Array[Long]], query: Seq[Double], k: Int,
-                 nprobe: Int): DataFrame =
-    annTopKIvf(openIndexIvf(spark, indexPath, centroids), centroids, query, k, nprobe)
-
-  def annTopKIvf(index: DataFrame, centroids: Array[Array[Long]],
-                 query: Seq[Double], k: Int, nprobe: Int): DataFrame = {
-    import graft.functions.{NearestCell, ScaledIntDot, SignBucket}
-    require(nprobe > 0 && nprobe <= centroids.length, "need 0 < nprobe <= cells")
-    val qScaled = query.map(SignBucket.scaleComponent).toArray
-    val cells = NearestCell.cellDistances(qScaled, centroids).zipWithIndex
-      .sortBy { case (d2, c) => (d2, c) }.take(nprobe).map(_._2)
-    val qlit = array(qScaled.map(lit(_)).toIndexedSeq: _*)
-    index
-      .where(col("cell").isin(cells.map(Int.box): _*))
-      .select(col("id"), col("cell"), ScaledIntDot(col("sv"), qlit).as("dot_scaled"))
-      .orderBy(desc("dot_scaled"), col("id"))
-      .limit(k)
-  }
-
-  /** Multi-probe lookup against a [[buildIndex]] table: reads ONLY the
-    * partitions of the query's bucket plus its Hamming-<=probeBits neighbor
-    * buckets (partition pruning — verify with .explain: PartitionFilters).
-    * Returns exact cosine top-k within the probed candidate set. The cosine
-    * is computed from the indexed scaled vector and stored norm via the
-    * codegen'd ScaledIntDot — the projection stays inside whole-stage
-    * codegen (no interpreted lambda over the probed set). */
-  def annTopKIndexed(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                     query: Seq[Double], k: Int, planes: Int,
-                     probeBits: Int = 1): DataFrame = {
-    import graft.functions.{ScaledIntDot, SignBucket}
-    val qBucket = SignBucket.compute(query.toArray, planes)
-    val buckets = SignBucket.probeBuckets(qBucket, planes, probeBits)
-    val qScaled = query.map(SignBucket.scaleComponent)
-    val qNorm = math.sqrt(qScaled.map(x => x.toDouble * x).sum)
-    val qlit = array(qScaled.map(lit(_)): _*)
-    val dot = ScaledIntDot(col("sv"), qlit)
-    openIndex(spark, indexPath, planes)
-      .where(col("bucket").isin(buckets: _*))
-      .select(col("id"),
-        (dot.cast(DoubleType) / (sqrt(col("n2").cast(DoubleType)) * lit(qNorm)))
-          .as("cosine"))
-      .orderBy(desc("cosine"), col("id"))
-      .limit(k)
   }
 }

@@ -77,10 +77,12 @@ class IvfSpec extends AnyFunSuite {
     val data = synthetic(300, 16)
     val centroids = Similarity.trainIvfCentroids(data, "vec_id", "embedding", k = 5, iters = 2)
     val idx = java.nio.file.Files.createTempDirectory("graft-ivf-spec").toString
-    Similarity.buildIndexIvf(data, "vec_id", "embedding", centroids, idx)
+    val layout = Similarity.Ivf(centroids)
+    Similarity.build(data, "vec_id", "embedding", layout, idx)
     val q = data.where(col("vec_id") === 7L)
       .select(col("embedding").cast(ArrayType(DoubleType))).head().getSeq[Double](0)
-    val got = Similarity.annTopKIvf(spark.read.parquet(idx), centroids, q, 5, nprobe = 2)
+    val got = Similarity.topKDot(
+      Similarity.candidates(Similarity.open(spark, idx, layout), layout, q, probe = 2), q, 5)
     val plan = got.queryExecution.executedPlan.toString
     assert("""PartitionFilters: \[[^\]]*cell""".r.findFirstIn(plan).isDefined, plan)
     assert(!plan.contains("lambdafunction"), plan)

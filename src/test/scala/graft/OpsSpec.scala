@@ -458,15 +458,26 @@ class SimilaritySpec extends AnyFunSuite {
     (3L, Seq(-1.0f, 0.0f, 0.0f)),
     (4L, Seq(0.8f, 0.2f, 0.1f))).toDF("vec_id", "embedding")
 
+  private def tmp(prefix: String) = java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Build `layout` over `data`, open it and rank the probed candidates. */
+  private def lookup(data: org.apache.spark.sql.DataFrame, layout: Similarity.Layout,
+                     q: Seq[Double], k: Int, probe: Int) = {
+    val idx = tmp("graft-ann-spec")
+    Similarity.build(data, "vec_id", "embedding", layout, idx)
+    Similarity.topKCosine(
+      Similarity.candidates(Similarity.open(spark, idx, layout), layout, q, probe), q, k)
+  }
+
   test("brute-force cosine top-k ranks by true cosine") {
-    val got = Similarity.bruteForceTopK(vecs, "vec_id", "embedding",
-      Seq(1.0f, 0.0f, 0.0f), 3).collect().map(_.getLong(0))
+    val got = Similarity.topKCosine(Similarity.scaled(vecs, "vec_id", "embedding"),
+      Seq(1.0, 0.0, 0.0), 3).collect().map(_.getLong(0))
     assert(got === Array(0L, 1L, 4L))
   }
 
   test("ANN LSH bucket search returns the query's own bucket neighbors first") {
-    val got = Similarity.annTopK(vecs, "vec_id", "embedding",
-      Seq(1.0f, 0.0f, 0.0f), 3, planes = 2).collect().map(_.getLong(0))
+    val got = lookup(vecs, Similarity.Flat(planes = 2), Seq(1.0, 0.0, 0.0), 3, probe = 0)
+      .collect().map(_.getLong(0))
     assert(got.nonEmpty)
     assert(got.head === 0L) // exact match always shares its own bucket
     assert(!got.contains(3L)) // antipode never lands in the same sign bucket
@@ -495,11 +506,9 @@ class SimilaritySpec extends AnyFunSuite {
     val rnd = new scala.util.Random(11)
     val data = (0L until 300L).map(i =>
       (i, Seq.fill(16)((rnd.nextDouble() - 0.5).toFloat))).toDF("vec_id", "embedding")
-    val idx = java.nio.file.Files.createTempDirectory("graft-ann-spec").toString
-    Similarity.buildIndex(data, "vec_id", "embedding", planes = 4, idx)
     val q = data.where(col("vec_id") === 5L)
       .select(col("embedding").cast(ArrayType(DoubleType))).head().getSeq[Double](0)
-    val got = Similarity.annTopKIndexed(spark, idx, q, k = 5, planes = 4, probeBits = 1)
+    val got = lookup(data, Similarity.Flat(planes = 4), q, k = 5, probe = 1)
     // pruning proof: the parquet scan keeps only the probed bucket partitions
     val plan = got.queryExecution.executedPlan.toString
     // non-empty filter list naming the partition column — bare
@@ -560,12 +569,9 @@ class SimilaritySpec extends AnyFunSuite {
     val data = (0L until 100L).map(i =>
       (i, (0 until 8).map(d => ((i * 37 + d * 13 + 11) % 19).toDouble / 19 - 0.5)))
       .toDF("vec_id", "embedding")
-    val idx = java.nio.file.Files.createTempDirectory("graft-annpfx-edge").toString
-    Similarity.buildIndexPrefixed(data, "vec_id", "embedding",
-      planes = 6, prefixBits = 6, idx)
     val q = data.where(col("vec_id") === 2L).select(col("embedding")).head().getSeq[Double](0)
-    val got = Similarity.annTopKIndexedPrefixed(spark, idx, q, k = 3,
-      planes = 6, prefixBits = 6, probeBits = 1).collect()
+    val got = lookup(data, Similarity.Prefixed(planes = 6, prefixBits = 6), q, k = 3, probe = 1)
+      .collect()
     assert(got.nonEmpty && got.head.getLong(0) === 2L)
   }
 
@@ -576,51 +582,66 @@ class SimilaritySpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
     val q = data.where(col("vec_id") === 3L).select(col("embedding")).head().getSeq[Double](0)
 
+    def probed(path: String, layout: Similarity.Layout) = Similarity.topKCosine(
+      Similarity.candidates(Similarity.open(spark, path, layout), layout, q, 1), q, 3)
+
     // prefixed LSH: planes and prefixBits are validated against the build
-    val pfx = java.nio.file.Files.createTempDirectory("graft-meta-pfx").toString
-    Similarity.buildIndexPrefixed(data, "vec_id", "embedding", planes = 8, prefixBits = 4, pfx)
-    assert(Similarity.annTopKIndexedPrefixed(spark, pfx, q, 3, planes = 8,
-      prefixBits = 4, probeBits = 1).collect().nonEmpty)
-    val e1 = intercept[IllegalArgumentException] {
-      Similarity.annTopKIndexedPrefixed(spark, pfx, q, 3, planes = 7,
-        prefixBits = 4, probeBits = 1)
-    }
+    val pfx = tmp("graft-meta-pfx")
+    Similarity.build(data, "vec_id", "embedding", Similarity.Prefixed(8, 4), pfx)
+    assert(probed(pfx, Similarity.Prefixed(8, 4)).collect().nonEmpty)
+    val e1 = intercept[IllegalArgumentException] { probed(pfx, Similarity.Prefixed(7, 4)) }
     assert(e1.getMessage.contains("planes"))
-    val e2 = intercept[IllegalArgumentException] {
-      Similarity.annTopKIndexedPrefixed(spark, pfx, q, 3, planes = 8,
-        prefixBits = 3, probeBits = 1)
-    }
+    val e2 = intercept[IllegalArgumentException] { probed(pfx, Similarity.Prefixed(8, 3)) }
     assert(e2.getMessage.contains("prefix_bits"))
-    // family mismatch: the flat-index entry point refuses a prefixed index
-    val e3 = intercept[IllegalArgumentException] { Similarity.openIndex(spark, pfx, 8) }
+    // family mismatch: a flat layout refuses a prefixed index
+    val e3 = intercept[IllegalArgumentException] {
+      Similarity.open(spark, pfx, Similarity.Flat(8))
+    }
     assert(e3.getMessage.contains("family"))
 
     // flat LSH: planes validated
-    val flat = java.nio.file.Files.createTempDirectory("graft-meta-flat").toString
-    Similarity.buildIndex(data, "vec_id", "embedding", planes = 6, flat)
-    assert(Similarity.annTopKIndexed(spark, flat, q, 3, planes = 6).collect().nonEmpty)
-    intercept[IllegalArgumentException] {
-      Similarity.annTopKIndexed(spark, flat, q, 3, planes = 5)
-    }
+    val flat = tmp("graft-meta-flat")
+    Similarity.build(data, "vec_id", "embedding", Similarity.Flat(6), flat)
+    assert(probed(flat, Similarity.Flat(6)).collect().nonEmpty)
+    intercept[IllegalArgumentException] { probed(flat, Similarity.Flat(5)) }
 
     // IVF: the caller's centroid matrix must digest-match the build's
-    val ivf = java.nio.file.Files.createTempDirectory("graft-meta-ivf").toString
+    val ivf = tmp("graft-meta-ivf")
     val cents = Similarity.trainIvfCentroids(data, "vec_id", "embedding", k = 4, iters = 1)
-    Similarity.buildIndexIvf(data, "vec_id", "embedding", cents, ivf)
-    assert(Similarity.annTopKIvf(spark, ivf, cents, q, 3, nprobe = 2).collect().nonEmpty)
+    Similarity.build(data, "vec_id", "embedding", Similarity.Ivf(cents), ivf)
+    assert(probed(ivf, Similarity.Ivf(cents)).collect().nonEmpty)
     val other = cents.map(_.clone()); other(0)(0) += 1L
-    val e4 = intercept[IllegalArgumentException] {
-      Similarity.annTopKIvf(spark, ivf, other, q, 3, nprobe = 2)
-    }
+    val e4 = intercept[IllegalArgumentException] { probed(ivf, Similarity.Ivf(other)) }
     assert(e4.getMessage.contains("centroids_digest"))
 
     // an index without metadata is refused outright
     val hp = new org.apache.hadoop.fs.Path(flat, "_graft_index_meta.json")
     hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, false)
-    val e5 = intercept[IllegalArgumentException] {
-      Similarity.annTopKIndexed(spark, flat, q, 3, planes = 6)
-    }
+    val e5 = intercept[IllegalArgumentException] { probed(flat, Similarity.Flat(6)) }
     assert(e5.getMessage.contains("no _graft_index_meta.json"))
+  }
+
+  test("one writer: every layout stores id, sv, n2 + its keys and opens only as itself") {
+    val data = (0L until 120L).map(i =>
+      (i, (0 until 8).map(d => ((i * 29 + d * 11 + 7) % 31).toDouble / 31 - 0.5)))
+      .toDF("vec_id", "embedding")
+    val layouts = Seq[Similarity.Layout](Similarity.Flat(4), Similarity.Prefixed(6, 3),
+      Similarity.Ivf(Similarity.trainIvfCentroids(data, "vec_id", "embedding", k = 3, iters = 1)))
+    val stored = Seq(Set("bucket"), Set("bucket", "part"), Set("cell"))
+    val paths = layouts.map { layout =>
+      val path = tmp("graft-one-writer")
+      Similarity.build(data, "vec_id", "embedding", layout, path)
+      path
+    }
+    for ((path, keys) <- paths.zip(stored))
+      assert(spark.read.parquet(path).columns.toSet === Set("id", "sv", "n2") ++ keys, path)
+    for ((path, built) <- paths.zip(layouts); layout <- layouts) {
+      if (layout eq built) assert(Similarity.open(spark, path, layout).count() === 120L)
+      else {
+        val e = intercept[IllegalArgumentException] { Similarity.open(spark, path, layout) }
+        assert(e.getMessage.contains("was built with family="), e.getMessage)
+      }
+    }
   }
 }
 

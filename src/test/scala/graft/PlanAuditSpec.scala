@@ -1,5 +1,6 @@
 package graft
 
+import graft.ops.Similarity
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -72,12 +73,13 @@ class PlanAuditSpec extends AnyFunSuite {
     val data = (0L until n.toLong).map(i =>
       (i, Seq.fill(32)(rnd.nextDouble() * 2 - 1))).toDF("vec_id", "embedding")
     val idx = java.nio.file.Files.createTempDirectory("graft-ann16-spec").toString
-    graft.ops.Similarity.buildIndex(data, "vec_id", "embedding", planes = 16, idx)
+    val layout = Similarity.Flat(planes = 16)
+    Similarity.build(data, "vec_id", "embedding", layout, idx)
     val q = data.where(col("vec_id") === 7L)
       .select(col("embedding")).head().getSeq[Double](0)
     val probeSet = SignBucket.probeBuckets(SignBucket.compute(q.toArray, 16), 16, 1)
     assert(probeSet.size === 17) // own bucket + 16 Hamming-1 neighbors
-    val idxDf = spark.read.parquet(idx)
+    val idxDf = Similarity.open(spark, idx, layout)
     val rowsTotal = idxDf.count()
     val rowsProbed = idxDf.where(col("bucket").isin(probeSet: _*)).count()
     val bucketsTotal = idxDf.select("bucket").distinct().count()
@@ -88,8 +90,8 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(probeSet.size.toDouble / bucketsTotal <= 0.01,
       s"probe set ${probeSet.size} of $bucketsTotal materialized buckets")
     // the lookup answers correctly within the probed set
-    val top = graft.ops.Similarity.annTopKIndexed(spark, idx, q, k = 3,
-      planes = 16, probeBits = 1).collect()
+    val top = Similarity.topKCosine(Similarity.candidates(idxDf, layout, q, probe = 1), q, k = 3)
+      .collect()
     assert(top.nonEmpty && top.head.getLong(0) === 7L) // self is rank 1
   }
 
@@ -104,14 +106,14 @@ class PlanAuditSpec extends AnyFunSuite {
     val data = (0L until n.toLong).map(i =>
       (i, Seq.fill(24)(rnd.nextDouble() * 2 - 1))).toDF("vec_id", "embedding")
     val idx = java.nio.file.Files.createTempDirectory("graft-annpfx-spec").toString
-    graft.ops.Similarity.buildIndexPrefixed(data, "vec_id", "embedding",
-      planes = 16, prefixBits = 8, idx)
+    val layout = Similarity.Prefixed(planes = 16, prefixBits = 8)
+    Similarity.build(data, "vec_id", "embedding", layout, idx)
     // bounded file layout: at most 256 prefix dirs regardless of planes
     val dirs = new java.io.File(idx).listFiles().count(f => f.getName.startsWith("part="))
     assert(dirs > 0 && dirs <= 256, s"$dirs prefix dirs")
     val q = data.where(col("vec_id") === 11L).select(col("embedding")).head().getSeq[Double](0)
-    val got = graft.ops.Similarity.annTopKIndexedPrefixed(spark, idx, q, k = 5,
-      planes = 16, prefixBits = 8, probeBits = 1)
+    val got = Similarity.topKCosine(
+      Similarity.candidates(Similarity.open(spark, idx, layout), layout, q, probe = 1), q, k = 5)
     val plan = got.queryExecution.executedPlan.toString
     assert("""PartitionFilters: \[[^\]]*part""".r.findFirstIn(plan).isDefined, plan.take(2000))
     assert("""PushedFilters: \[[^\]]*In\(bucket""".r.findFirstIn(plan).isDefined, plan.take(2000))
@@ -121,7 +123,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // parity with the unindexed formulation restricted to the probed buckets
     val probeSet = SignBucket.probeBuckets(SignBucket.compute(q.toArray, 16), 16, 1)
     val want = data
-      .withColumn("b", graft.ops.Similarity.signBucket(col("embedding"), 16))
+      .withColumn("b", Similarity.signBucket(col("embedding"), 16))
       .where(col("b").isin(probeSet: _*))
       .select(col("vec_id"),
         HofReference.cosine(col("embedding"), array(q.map(lit(_)): _*)).as("c"))
@@ -130,15 +132,16 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(gotIds === want)
   }
 
-  test("similarity baselines (bruteForceTopK, annTopK) are HOF-free too") {
+  test("brute-force rankers topKCosine and topKDot are HOF-free too") {
     import spark.implicits._
     val data = (0L until 50L).map(i =>
       (i, (0 until 8).map(d => ((i * 31 + d * 7 + 3) % 17).toFloat / 17 - 0.5f)))
       .toDF("vec_id", "embedding")
-    val q = (0 until 8).map(d => ((d * 7 + 3) % 17).toFloat / 17 - 0.5f)
+    val q = (0 until 8).map(d => ((d * 7 + 3) % 17).toFloat / 17 - 0.5f).map(_.toDouble)
+    val scaled = Similarity.scaled(data, "vec_id", "embedding")
     for ((name, df) <- Seq(
-        "bruteForceTopK" -> graft.ops.Similarity.bruteForceTopK(data, "vec_id", "embedding", q, 3),
-        "annTopK" -> graft.ops.Similarity.annTopK(data, "vec_id", "embedding", q, 3, planes = 2))) {
+        "topKCosine" -> Similarity.topKCosine(scaled, q, 3),
+        "topKDot" -> Similarity.topKDot(scaled, q, 3))) {
       df.collect()
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("lambdafunction"), s"$name plan has a HOF: ${plan.take(2000)}")
@@ -154,23 +157,21 @@ class PlanAuditSpec extends AnyFunSuite {
     for ((planes, prefixBits) <- Seq((8, 3), (10, 6), (13, 8))) {
       val flat = java.nio.file.Files.createTempDirectory(s"graft-annprop-f$planes").toString
       val pfx = java.nio.file.Files.createTempDirectory(s"graft-annprop-p$planes").toString
-      graft.ops.Similarity.buildIndex(data, "vec_id", "embedding", planes, flat)
-      graft.ops.Similarity.buildIndexPrefixed(data, "vec_id", "embedding", planes, prefixBits, pfx)
+      val layouts = Seq(flat -> Similarity.Flat(planes), pfx -> Similarity.Prefixed(planes, prefixBits))
+      layouts.foreach { case (path, layout) => Similarity.build(data, "vec_id", "embedding", layout, path) }
       for (qid <- Seq(3L, 500L, 1499L)) {
         val q = data.where(col("vec_id") === qid)
           .select(col("embedding")).head().getSeq[Double](0)
-        val a = graft.ops.Similarity.annTopKIndexed(spark, flat, q, k = 5,
-          planes, probeBits = 1).collect().map(r => (r.getLong(0), r.getDouble(1)))
-        val b = graft.ops.Similarity.annTopKIndexedPrefixed(spark, pfx, q, k = 5,
-          planes, prefixBits, probeBits = 1).collect().map(r => (r.getLong(0), r.getDouble(1)))
-        assert(a.toSeq === b.toSeq, s"planes=$planes prefixBits=$prefixBits qid=$qid")
+        val Seq(a, b) = layouts.map { case (path, layout) =>
+          Similarity.topKCosine(
+              Similarity.candidates(Similarity.open(spark, path, layout), layout, q, probe = 1), q, k = 5)
+            .collect().map(r => (r.getAs[Long]("id"), r.getAs[Double]("cosine"))).toSeq
+        }
+        assert(a === b, s"planes=$planes prefixBits=$prefixBits qid=$qid")
       }
     }
-    // lookup mirrors the builder's invariant instead of silently mis-shifting
-    intercept[IllegalArgumentException] {
-      graft.ops.Similarity.annTopKIndexedPrefixed(spark.emptyDataFrame,
-        Seq(0.1, 0.2), k = 1, planes = 8, prefixBits = 9, probeBits = 1)
-    }
+    // the layout mirrors the builder's invariant instead of silently mis-shifting
+    intercept[IllegalArgumentException] { Similarity.Prefixed(planes = 8, prefixBits = 9) }
   }
 
   test("dedup pipelines are HOF-free end to end (no interpreted lambda anywhere)") {
