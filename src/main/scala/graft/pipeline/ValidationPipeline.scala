@@ -2,8 +2,9 @@ package graft.pipeline
 
 import graft.json._
 import graft.rules.SuiteCompiler
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /**
@@ -14,8 +15,11 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
  * a changed suite invalidates prior completions (the analogue of storing
  * jsonschema_compiled values, json_schema_validate--0.1.0.sql:37-56).
  */
-final case class PartitionEntry(part: Int, nRows: Long, nViolations: Long,
-                                passAll: Boolean)
+final case class PartitionEntry(part: Int, nRows: Long, nViolations: Long) {
+  /** Rule passes are two-valued, so a partition passes exactly when no
+    * (row, rule) pair in it is violated. */
+  def passAll: Boolean = nViolations == 0
+}
 
 final class Manifest(val snapshotId: String, val ruleSetHash: String,
                      val entries: Map[Int, PartitionEntry],
@@ -58,8 +62,7 @@ object Manifest {
             case Some(JArr(xs)) => xs.collect { case e: JObj =>
               def num(k: String) = e.get(k).collect { case JNum(n) => n.toLong }.getOrElse(0L)
               val part = num("part").toInt
-              part -> PartitionEntry(part, num("nRows"), num("nViolations"),
-                e.get("passAll").collect { case JBool(b) => b }.getOrElse(false))
+              part -> PartitionEntry(part, num("nRows"), num("nViolations"))
             }.toMap
             case _ => Map.empty[Int, PartitionEntry]
           }
@@ -86,8 +89,9 @@ object Manifest {
 /**
  * Partition-orchestrated validation run (SURVEY.md §7 M4):
  * per batch of Iceberg-style partitions — filter prunes the parquet scan to
- * just those partitions — compute per-partition verdicts + violation rows,
- * write violations partitioned by `part`, then checkpoint the manifest.
+ * just those partitions — write violations partitioned by `part` in ONE
+ * action whose observed counters give the per-partition verdicts, then
+ * checkpoint the manifest.
  * Global rules (doc_id uniqueness crosses partitions) run once per snapshot.
  */
 object ValidationPipeline {
@@ -118,59 +122,37 @@ object ValidationPipeline {
 
     val corpus = spark.read.parquet(corpusPath)
     val allParts = corpus.select("part").distinct().collect().map(_.getInt(0)).sorted
-    val todo = allParts.filterNot(manifest.isDone)
+    val todo = allParts.filterNot(manifest.isDone).toIndexedSeq
     val skipped = allParts.length - todo.length
 
     todo.grouped(batchSize).foreach { batch =>
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
       // partition pruning: `part` is the parquet partition column, so this
       // filter never reads the other partitions' files
       val slice = corpus.where(col("part").isin(batch.map(Integer.valueOf): _*))
-
-      // the verdict aggregation and the violation write are INDEPENDENT
-      // actions over the same slice — submitted concurrently so executors
-      // are never idle during the other action's driver-side planning/
-      // collect window (a serial fraction that eats scaling at high
-      // executor counts; see Bench.validationJob for the measured effect).
-      // The manifest checkpoint below still happens only after BOTH finish,
-      // so resume semantics are unchanged.
-      // blocking{}: both bodies block on Spark actions; without the marker
-      // ExecutionContext.global (parallelism = CPU count) could serialize
-      // them on a small driver or starve other users of the shared pool
-      val fVerdicts = Future(scala.concurrent.blocking {
-        compiled.verdicts(slice, Seq("part")).collect()
-      })
-
+      // per-partition rows and violated (row, rule) pairs, counted on the
+      // write's own scan: 2 conditional aggregates per partition in the batch.
+      // The write plan must hold no global sort: its sampling job would run
+      // the observed plan a second time and double every counter.
+      val obs = Observation()
+      val counters = batch.flatMap { p =>
+        val inPart = col("part") === p
+        Seq(count(when(inPart, 1)).as(s"n_$p"),
+          coalesce(sum(when(inPart, compiled.violationCountCol.cast(LongType))), lit(0L)).as(s"v_$p"))
+      }
       // partitionBy(part) + DYNAMIC partition overwrite: a batch replayed
       // after a crash-before-checkpoint REPLACES its partitions' violations
       // instead of appending duplicates (exactly-once output per partition,
       // keyed by the same lineage the manifest records)
-      val fViolations = Future(scala.concurrent.blocking {
-        compiled.violations(slice, keyCol, Seq("part"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("part")
-          .parquet(s"$outDir/violations")
-      })
-      // await BOTH before proceeding OR unwinding: if one future failed and
-      // the other were abandoned mid-flight, a resume retry of this batch
-      // could run concurrently with the orphaned write to the same
-      // partitions. Both Trys complete first; then failures rethrow.
-      val vTry = scala.util.Try(Await.result(fVerdicts, Duration.Inf))
-      val wTry = scala.util.Try(Await.result(fViolations, Duration.Inf))
-      wTry.get
-      val verdictRows = vTry.get
-
-      val entries = verdictRows.map { r =>
-        PartitionEntry(
-          part = r.getAs[Int]("part"),
-          nRows = r.getAs[Long]("n_rows"),
-          nViolations = r.getAs[Long]("n_violations"),
-          passAll = r.getAs[Boolean]("pass_all"))
+      compiled.violations(slice.observe(obs, counters.head, counters.tail: _*), keyCol, Seq("part"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("part")
+        .parquet(s"$outDir/violations")
+      val m = obs.get
+      val entries = batch.map { p =>
+        PartitionEntry(p, m(s"n_$p").asInstanceOf[Long], m(s"v_$p").asInstanceOf[Long])
       }
-      manifest = manifest.withEntries(entries.toIndexedSeq)
+      manifest = manifest.withEntries(entries)
       Manifest.save(manifest, manifestPath) // checkpoint after each batch
     }
 

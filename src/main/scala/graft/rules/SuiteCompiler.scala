@@ -11,11 +11,13 @@ import org.apache.spark.sql.types._
 final case class ViolationRow(doc_id: String, rule_id: String, observed: String, expected: String)
 
 /** A column-level rule compiled to pure Catalyst expressions:
-  * `pass` is a BooleanType predicate (true = row passes) — kept free of
-  * row-level allocation so the scan+predicate pipeline stays inside
-  * whole-stage codegen; `violations` (array<struct<rule_id,observed,expected>>,
-  * one entry per failed check) is only evaluated behind a failing-rows
-  * filter / CASE WHEN, so clean rows never pay for report construction —
+  * `pass` is a BooleanType predicate (true = row passes), never NULL, so
+  * a row is valid exactly when it counts no violated rule and emits no
+  * violation entry — kept free of row-level allocation so the
+  * scan+predicate pipeline stays inside whole-stage codegen; `violations`
+  * (array<struct<rule_id,observed,expected>>, one entry per failed check)
+  * is only evaluated behind a failing-rows filter / CASE WHEN, so clean
+  * rows never pay for report construction —
   * the Column analogue of the reference's errors=NULL suppressed validation
   * (json_schema_validate.c:1551 etc.). */
 final case class CompiledRule(id: String, pass: Column, violations: Column)
@@ -55,7 +57,7 @@ object SuiteCompiler {
     /** All violations for a row: array<struct<rule_id,observed,expected>>. */
     def violationsCol: Column = {
       val arrays = rules.map(_.violations)
-      if (arrays.isEmpty) array().cast(violationsType)
+      if (arrays.isEmpty) noViolations
       else if (arrays.size == 1) arrays.head
       else flatten(array(arrays: _*))
     }
@@ -71,33 +73,36 @@ object SuiteCompiler {
         .reduceOption(_ + _).getOrElse(lit(0))
 
     /** Exploded typed violations, sorted (doc_id, rule_id) — the deterministic
-      * golden-output contract (SURVEY.md §2.2 ordering note). The codegen'd
-      * predicate filter runs FIRST so violation-struct construction (allocation
-      * heavy) only touches failing rows. */
+      * golden-output contract (SURVEY.md §2.2 ordering note). The only form
+      * that sorts: the sink form below plus one global `orderBy`, for callers
+      * that read the rows in order. */
     def violations(df: DataFrame, keyCol: String): DataFrame =
-      violations(df, keyCol, Nil)
+      violations(df, keyCol, Nil).orderBy("doc_id", "rule_id")
 
-    /** As [[violations]] but retaining `keepCols` (e.g. the partition column,
-      * so sinks can write partitionBy(part) and replay idempotently). */
+    /** Unsorted violations retaining `keepCols` (e.g. the partition column,
+      * so sinks can write partitionBy(part) and replay idempotently) — the
+      * sink form. A file sink keeps no row order, so a global sort here would
+      * only add a range exchange whose sampling job runs the whole plan a
+      * second time (and double-counts any `observe`d metric below it). The
+      * codegen'd predicate filter runs FIRST so violation-struct construction
+      * (allocation heavy) only touches failing rows. */
     def violations(df: DataFrame, keyCol: String, keepCols: Seq[String]): DataFrame = {
       val keep = keepCols.map(col)
-      val withV = df.where(!isValidCol)
-        .withColumn("__v", violationsCol)
+      df.where(!isValidCol)
         .select(keep ++ Seq(col(keyCol).cast(StringType).as("doc_id"),
-          explode(col("__v")).as("v")): _*)
-      withV.select(keep ++ Seq(col("doc_id"), col("v.rule_id"),
+          explode(violationsCol).as("v")): _*)
+        .select(keep ++ Seq(col("doc_id"), col("v.rule_id"),
           col("v.observed"), col("v.expected")): _*)
-        .orderBy("doc_id", "rule_id")
     }
 
     /** Violation sample capped per rule — at 10^12-row scale a failing rule
       * can emit billions of entries; reports need the first `perRule`
       * examples, not all of them. One window shuffle over the (already
-      * filtered) failing rows only. */
+      * filtered) failing rows only, then the one final sort. */
     def violationsSample(df: DataFrame, keyCol: String, perRule: Int): DataFrame = {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("rule_id").orderBy("doc_id")
-      violations(df, keyCol)
+      violations(df, keyCol, Nil)
         .withColumn("__rn", row_number().over(w))
         .where(col("__rn") <= perRule)
         .drop("__rn")
@@ -192,8 +197,13 @@ object SuiteCompiler {
     case _ => "string"
   }
 
-  private def mkViolation(ruleId: String, observed: Column, expected: String): Column =
-    struct(lit(ruleId).as("rule_id"), observed.as("observed"), lit(expected).as("expected"))
+  private val noViolations: Column = array().cast(violationsType)
+
+  /** A rule that reports at most one entry per row: `observed` under `id`
+    * when `pass` is false. */
+  private def single(id: String, pass: Column, observed: Column, expected: String): CompiledRule =
+    CompiledRule(id, pass, when(!pass, array(struct(lit(id).as("rule_id"),
+      observed.as("observed"), lit(expected).as("expected")))).otherwise(noViolations))
 
   /** Compile one column's keyword object into rules. */
   private def compileColumn(colName: String, schemaV: JVal): Vector[CompiledRule] = {
@@ -201,9 +211,7 @@ object SuiteCompiler {
       case o: JObj => o
       case JBool(true) => return Vector.empty
       case JBool(false) =>
-        return Vector(CompiledRule(s"$colName:false",
-          lit(false),
-          array(mkViolation(s"$colName:false", lit("Schema is false"), "false"))))
+        return Vector(single(s"$colName:false", lit(false), lit("Schema is false"), "false"))
       case _ => return Vector.empty // malformed fragments vacuous (c:675 etc.)
     }
     val c = col(colName)
@@ -212,21 +220,14 @@ object SuiteCompiler {
     // helper: absent (null) column values skip value-level keywords, mirroring
     // the reference's "absent property skipped" (c:824); `required` handles nulls.
     def guarded(pred: Column): Column = c.isNull || pred
-    def rule(keyword: String, pred: Column, observed: Column, expected: String): Unit = {
-      val id = s"$colName:$keyword"
-      val p = guarded(pred)
-      out += CompiledRule(id, p,
-        when(!p, array(mkViolation(id, observed, expected))).otherwise(array().cast(violationsType)))
-    }
+    def rule(keyword: String, pred: Column, observed: Column, expected: String): Unit =
+      out += single(s"$colName:$keyword", guarded(pred), observed, expected)
 
     // required (extension: boolean flag → null check; message format c:768-771)
     s.get("required") match {
       case Some(JBool(true)) =>
-        val id = s"$colName:required"
-        val p = c.isNotNull
-        out += CompiledRule(id, p,
-          when(!p, array(mkViolation(id, lit(s"Missing required property: $colName"),
-            "true"))).otherwise(array().cast(violationsType)))
+        out += single(s"$colName:required", c.isNotNull,
+          lit(s"Missing required property: $colName"), "true")
       case _ => ()
     }
 
@@ -346,7 +347,7 @@ object SuiteCompiler {
           val viols = when(!pass,
             flatten(zip_with(c, sequence(lit(0), size(c) - 1), (e, i) =>
               elemViolations(id, colName, e, i, elemMsgs)))
-          ).otherwise(array().cast(violationsType))
+          ).otherwise(noViolations)
           out += CompiledRule(id, pass, viols)
         }
       case _ => () // non-object items vacuous
@@ -375,11 +376,8 @@ object SuiteCompiler {
     s.get("requiredKeys").orElse(s.get("required").filter(_.isInstanceOf[JArr])).foreach {
       case JArr(reqs) =>
         reqs.collect { case JStr(k) => k }.foreach { k =>
-          val id = s"$colName:required:$k"
-          val p = guarded(map_contains_key(c, k))
-          out += CompiledRule(id, p,
-            when(!p, array(mkViolation(id, lit(s"Missing required property: $k"), s""""$k"""")))
-              .otherwise(array().cast(violationsType)))
+          out += single(s"$colName:required:$k", guarded(map_contains_key(c, k)),
+            lit(s"Missing required property: $k"), s""""$k"""")
         }
       case _ => ()
     }
@@ -427,7 +425,7 @@ object SuiteCompiler {
               lit(id).as("rule_id"),
               format_string("Additional property '%s' is not allowed", k).as("observed"),
               lit("false").as("expected"))))
-            .otherwise(array().cast(violationsType))
+            .otherwise(noViolations)
           out += CompiledRule(id, pass, viols)
         case apSchema: JObj =>
           // schema-valued: non-exempt VALUES are validated against the
@@ -438,19 +436,19 @@ object SuiteCompiler {
           elemPredicate(apSchema).foreach { case (valPred, msgs) =>
             val id = s"$colName:additionalProperties"
             val failing = filter(map_entries(c),
-              e => !exempt(e.getField("key")) && !coalesce(valPred(e.getField("value")), lit(true)))
+              e => !exempt(e.getField("key")) && !valPred(e.getField("value")))
             val pass = guarded(size(failing) === 0)
             val viols = when(!pass, flatten(transform(failing, e => {
                 val perCheck = msgs.map { case (msg, pred) =>
-                  when(!coalesce(pred(e.getField("value")), lit(true)), array(struct(
+                  when(!pred(e.getField("value")), array(struct(
                     format_string(s"$colName/%s:additionalProperties", e.getField("key")).as("rule_id"),
                     lit(msg).as("observed"),
-                    e.getField("value").cast(StringType).as("expected")))
-                  ).otherwise(array().cast(violationsType))
+                    coalesce(e.getField("value").cast(StringType), lit("null")).as("expected")))
+                  ).otherwise(noViolations)
                 }
                 if (perCheck.size == 1) perCheck.head else flatten(array(perCheck: _*))
               })))
-              .otherwise(array().cast(violationsType))
+              .otherwise(noViolations)
             out += CompiledRule(id, pass, viols)
           }
         case _ => () // true / malformed: vacuous
@@ -486,14 +484,9 @@ object SuiteCompiler {
     s.get("anyOf").foreach {
       case JArr(subs) =>
         val compiled = subs.flatMap(subPassViol)
-        if (compiled.nonEmpty) {
-          val id = s"$colName:anyOf"
-          val pass = compiled.map(_._1).reduce(_ || _)
-          out += CompiledRule(id, pass,
-            when(!pass, array(mkViolation(id,
-              lit("Value does not match any schema in anyOf"), Json.render(JArr(subs)))))
-              .otherwise(array().cast(violationsType)))
-        }
+        if (compiled.nonEmpty)
+          out += single(s"$colName:anyOf", compiled.map(_._1).reduce(_ || _),
+            lit("Value does not match any schema in anyOf"), Json.render(JArr(subs)))
       case _ => ()
     }
 
@@ -501,26 +494,18 @@ object SuiteCompiler {
       case JArr(subs) =>
         val compiled = subs.flatMap(subPassViol)
         if (compiled.nonEmpty) {
-          val id = s"$colName:oneOf"
           val matches = compiled.map(_._1.cast(IntegerType)).reduce(_ + _)
-          val pass = matches === 1
           val msg = when(matches === 0, lit("Value does not match any schema in oneOf"))
             .otherwise(format_string("Value matches %d schemas in oneOf, but must match exactly one", matches))
-          out += CompiledRule(id, pass,
-            when(!pass, array(mkViolation(id, msg, Json.render(JArr(subs)))))
-              .otherwise(array().cast(violationsType)))
+          out += single(s"$colName:oneOf", matches === 1, msg, Json.render(JArr(subs)))
         }
       case _ => ()
     }
 
     s.get("not").foreach { sub =>
       subPassViol(sub).foreach { case (subPass, _) =>
-        val id = s"$colName:not"
-        val pass = !subPass
-        out += CompiledRule(id, pass,
-          when(!pass, array(mkViolation(id,
-            lit("Value must not match the schema in 'not'"), Json.render(sub))))
-            .otherwise(array().cast(violationsType)))
+        out += single(s"$colName:not", !subPass,
+          lit("Value must not match the schema in 'not'"), Json.render(sub))
       }
     }
 
@@ -530,11 +515,10 @@ object SuiteCompiler {
       if (thenPV.isDefined || elsePV.isDefined) {
         subPassViol(ifSchema).foreach { case (ifPass, _) =>
           val id = s"$colName:if"
-          val emptyV = array().cast(violationsType)
           val pass = when(ifPass, thenPV.map(_._1).getOrElse(lit(true)))
             .otherwise(elsePV.map(_._1).getOrElse(lit(true)))
-          val viols = when(ifPass, thenPV.map(_._2).getOrElse(emptyV))
-            .otherwise(elsePV.map(_._2).getOrElse(emptyV))
+          val viols = when(ifPass, thenPV.map(_._2).getOrElse(noViolations))
+            .otherwise(elsePV.map(_._2).getOrElse(noViolations))
           out += CompiledRule(id, pass, viols)
         }
       }
@@ -543,7 +527,7 @@ object SuiteCompiler {
     // equalsExpr extension: cross-column invariant (e.g. "size(tokens)")
     s.get("equalsExpr").foreach {
       case JStr(e) =>
-        rule("equalsExpr", c === expr(e),
+        rule("equalsExpr", c <=> expr(e),
           format_string(s"Value %s does not equal $e = %s", c.cast(StringType), expr(e).cast(StringType)),
           s""""$e"""")
       case _ => ()
@@ -578,8 +562,7 @@ object SuiteCompiler {
         .when(typeof(c).startsWith("struct") || typeof(c).startsWith("map"), "object")
         .when(typeof(c).isin("tinyint", "smallint", "int", "bigint", "double", "float") || typeof(c).startsWith("decimal"), "number")
         .otherwise(typeof(c)))
-    CompiledRule(id, pass,
-      when(!pass, array(mkViolation(id, observed, expectedJson))).otherwise(array().cast(violationsType)))
+    single(id, pass, observed, expectedJson)
   }
 
   /** String-shaped predicate for propertyNames keys (pattern/length/enum). */
@@ -610,7 +593,9 @@ object SuiteCompiler {
 
   /** When the element schema is ONLY numeric bounds, the forall collapses to
     * aggregate-free array extrema — ArrayMin/ArrayMax are codegen'd, the
-    * lambda-based HOFs are not (they run interpreted per element). */
+    * lambda-based HOFs are not (they run interpreted per element). Extrema
+    * skip null elements; an array with no non-null element has none and
+    * passes, as bounds apply to numbers only. */
   private def boundsOnlyPass(c: Column, s: JObj): Option[Column] = {
     val boundKeys = Set("minimum", "maximum", "exclusiveMinimum", "exclusiveMaximum")
     if (!s.keys.forall(boundKeys.contains)) return None
@@ -620,29 +605,32 @@ object SuiteCompiler {
       case ("exclusiveMinimum", JNum(n)) => array_min(c) > decLit(n)
       case ("exclusiveMaximum", JNum(n)) => array_max(c) < decLit(n)
     }
-    preds.reduceOption(_ && _)
+    preds.reduceOption(_ && _).map(coalesce(_, lit(true)))
   }
 
-  /** Element-level predicate for items/contains: bounds, enum, const, integer type. */
+  /** Element-level predicate for items/contains: bounds, enum, const,
+    * integer type. Every check is two-valued: a null element skips the
+    * numeric bounds (they apply to numbers only) and fails enum, const and
+    * type, as in the row-scalar walker. */
   private def elemPredicate(s: JObj): Option[(Column => Column, Vector[(String, Column => Column)])] = {
     val checks = Vector.newBuilder[(String, Column => Column, String)] // (keyword, pred, message)
-    s.get("minimum").foreach { case JNum(n) => checks += (("minimum", (e: Column) => e >= decLit(n), "Value is less than minimum")); case _ => () }
-    s.get("maximum").foreach { case JNum(n) => checks += (("maximum", (e: Column) => e <= decLit(n), "Value exceeds maximum")); case _ => () }
-    s.get("exclusiveMinimum").foreach { case JNum(n) => checks += (("exclusiveMinimum", (e: Column) => e > decLit(n), "Value must be greater than exclusiveMinimum")); case _ => () }
-    s.get("exclusiveMaximum").foreach { case JNum(n) => checks += (("exclusiveMaximum", (e: Column) => e < decLit(n), "Value must be less than exclusiveMaximum")); case _ => () }
+    s.get("minimum").foreach { case JNum(n) => checks += (("minimum", (e: Column) => e.isNull || e >= decLit(n), "Value is less than minimum")); case _ => () }
+    s.get("maximum").foreach { case JNum(n) => checks += (("maximum", (e: Column) => e.isNull || e <= decLit(n), "Value exceeds maximum")); case _ => () }
+    s.get("exclusiveMinimum").foreach { case JNum(n) => checks += (("exclusiveMinimum", (e: Column) => e.isNull || e > decLit(n), "Value must be greater than exclusiveMinimum")); case _ => () }
+    s.get("exclusiveMaximum").foreach { case JNum(n) => checks += (("exclusiveMaximum", (e: Column) => e.isNull || e < decLit(n), "Value must be less than exclusiveMaximum")); case _ => () }
     s.get("const").foreach {
-      case JNum(n) => checks += (("const", (e: Column) => e === decLit(n), "Value does not match const"))
-      case JStr(x) => checks += (("const", (e: Column) => e === lit(x), "Value does not match const"))
+      case JNum(n) => checks += (("const", (e: Column) => e <=> decLit(n), "Value does not match const"))
+      case JStr(x) => checks += (("const", (e: Column) => e <=> lit(x), "Value does not match const"))
       case _ => ()
     }
     s.get("enum").foreach {
       case JArr(ms) =>
         val scalars = ms.collect { case JStr(x) => x: Any; case JNum(n) => n.underlying: Any; case JBool(b) => b: Any }
-        if (scalars.nonEmpty) checks += (("enum", (e: Column) => e.isin(scalars: _*), "Value not in enum"))
+        if (scalars.nonEmpty) checks += (("enum", (e: Column) => e.isNotNull && e.isin(scalars: _*), "Value not in enum"))
       case _ => ()
     }
     s.get("type").foreach {
-      case JStr("integer") => checks += (("type", (e: Column) => e === floor(e), "Expected type integer but got number"))
+      case JStr("integer") => checks += (("type", (e: Column) => e.isNotNull && e === floor(e), "Expected type integer but got number"))
       case _ => () // element static types guaranteed by the array's Spark type
     }
     val cs = checks.result()
@@ -660,8 +648,8 @@ object SuiteCompiler {
       when(!pred(e), array(struct(
         format_string(s"$colName[%d]:items", i).as("rule_id"),
         lit(msg).as("observed"),
-        e.cast(StringType).as("expected")))
-      ).otherwise(array().cast(violationsType))
+        coalesce(e.cast(StringType), lit("null")).as("expected")))
+      ).otherwise(noViolations)
     }
     if (perCheck.size == 1) perCheck.head else flatten(array(perCheck: _*))
   }

@@ -180,6 +180,41 @@ class PipelineSpec extends AnyFunSuite {
       SuiteCompiler.compile(suite).suiteHash)
     assert(m6.globalDuplicateKeys === Some(0L))
   }
+
+  test("each batch is one scan: 3 corpus reads per run, observed verdicts == compiled.verdicts") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    import org.apache.spark.sql.graftshim.Bridge
+    val dir = Files.createTempDirectory("graft-pipe-scan").toString
+    val corpusPath = s"$dir/corpus"
+    val rows = 3000L
+    // source violations land in part 0, n_tok ones in parts 0 and 4
+    CorpusGen.writePartitioned(CorpusGen.generate(spark, CorpusGen.Config(rows = rows,
+      numPartitions = 8, dupEvery = 11, badSourceEvery = 16, badNtokEvery = 12)), corpusPath)
+
+    val sc = spark.sparkContext
+    val read = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) { read.addAndGet(e.taskMetrics.inputMetrics.recordsRead); () }
+    }
+    Bridge.drainListenerBus(sc, 30000L)
+    sc.addSparkListener(listener)
+    val r = try {
+      val r = ValidationPipeline.run(spark, corpusPath, suite, s"$dir/out", "snap-1", batchSize = 3)
+      Bridge.drainListenerBus(sc, 30000L)
+      r
+    } finally sc.removeSparkListener(listener)
+    // the parts listing, one violation write per batch (3 batches), the
+    // global duplicate check — nothing else may scan the corpus
+    assert(read.get === 3 * rows, s"${read.get.toDouble / rows} corpus reads")
+
+    val want = SuiteCompiler.compile(suite).verdicts(spark.read.parquet(corpusPath), Seq("part"))
+      .collect().map(v => (v.getAs[Int]("part"), v.getAs[Long]("n_rows"),
+        v.getAs[Long]("n_violations"), v.getAs[Boolean]("pass_all"))).sortBy(_._1).toSeq
+    assert(r.verdicts.map(e => (e.part, e.nRows, e.nViolations, e.passAll)) === want)
+    assert(want.map(_._4) === (0 until 8).map(p => p != 0 && p != 4))
+    assert(r.globalDuplicateKeys === (rows - 1) / 11)
+  }
 }
 
 class CompiledSchemaSpec extends org.scalatest.funsuite.AnyFunSuite {

@@ -197,4 +197,16 @@ class PlanAuditSpec extends AnyFunSuite {
     val plan = compiled.verdicts(docs, Seq("source")).queryExecution.executedPlan.toString
     assert(plan.contains("HashAggregate"), plan.take(2000))
   }
+
+  test("violation sorts: v_violations_sample and the golden form sort once, the sink form never") {
+    val compiled = graft.rules.SuiteCompiler.compile(SparkEntry.documentsSuite)
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    // the plan before execution: an executed adaptive plan prints its
+    // initial plan next to the final one
+    def rangeExchanges(df: org.apache.spark.sql.DataFrame): Int =
+      "rangepartitioning\\(".r.findAllIn(df.queryExecution.executedPlan.toString).length
+    assert(rangeExchanges(SparkEntry.queries("v_violations_sample")(spark, dir)) === 1)
+    assert(rangeExchanges(compiled.violations(docs, "doc_id")) === 1)
+    assert(rangeExchanges(compiled.violations(docs, "doc_id", Seq("source"))) === 0)
+  }
 }

@@ -70,6 +70,59 @@ class SuiteAgreementSpec extends AnyFunSuite {
     }
     df.unpersist()
   }
+
+  test("rule predicates are two-valued: NULL-bearing rows agree with the walker, the count and verdicts") {
+    import spark.implicits._
+    import graft.json.Json
+    import graft.rules.JsonSchemaValidator
+    // (a) bounds-only items over arrays with no non-null element, (b)
+    // equalsExpr against a NULL expression, (c) element enum over a NULL
+    // element; row 3 also mixes a NULL element with a real bounds failure
+    val rows = Seq(
+      (1L, Seq.empty[Option[Int]], 3, Option(Seq(1, 2, 3)), Seq(Option(1), Option(2))),
+      (2L, Seq(Option.empty[Int]), 3, Option.empty[Seq[Int]], Seq(Option(1))),
+      (3L, Seq(Option.empty[Int], Option(-1)), 1, Option(Seq(7)), Seq(Option(1), None)),
+      (4L, Seq(Option(5)), 1, Option(Seq(7)), Seq(Option(2))))
+    val df = rows.toDF("doc_id", "arr", "n_tok", "tokens", "e").withColumn("part", $"doc_id")
+    val compiled = SuiteCompiler.compile(
+      """{ "rules": {
+        |  "arr":   { "items": { "minimum": 0 } },
+        |  "n_tok": { "equalsExpr": "size(tokens)" },
+        |  "e":     { "items": { "enum": [1, 2] } }
+        |}}""".stripMargin)
+
+    val perRow = df.select($"doc_id", compiled.isValidCol.as("ok"), compiled.violationCountCol.as("n"))
+      .collect().map(r => r.getLong(0) -> (Option(r.get(1)).map(_.asInstanceOf[Boolean]), r.getInt(2))).toMap
+    assert(perRow.values.forall(_._1.isDefined), s"NULL isValidCol: $perRow")
+    val viols = compiled.violations(df, "doc_id").collect()
+      .map(r => (r.getString(0).toLong, r.getString(1), r.getString(2), r.getString(3)))
+    val rowsOut = viols.groupBy(_._1).map { case (k, vs) => k -> vs.length }
+    perRow.foreach { case (id, (ok, n)) =>
+      assert(ok.get === (n == 0), s"row $id: isValid=$ok, violationCount=$n")
+      assert(ok.get === !rowsOut.contains(id), s"row $id: isValid=$ok, violation rows=${rowsOut.get(id)}")
+    }
+    assert(perRow.map { case (id, (ok, _)) => id -> ok.get } === Map(1L -> true, 2L -> false, 3L -> false, 4L -> true))
+    assert(viols.toSeq.filter(_._1 == 2L).map(_._2) === Seq("n_tok:equalsExpr"))
+
+    // walker agreement on the array columns (rows (a) and (c))
+    val schema = Json.parse(
+      """{"properties":{"arr":{"items":{"minimum":0}},"e":{"items":{"enum":[1,2]}}}}""")
+    def js(xs: Seq[Option[Int]]) = xs.map(_.fold("null")(_.toString)).mkString("[", ",", "]")
+    rows.foreach { case (id, arr, _, _, e) =>
+      val walker = JsonSchemaValidator.violations(
+        Json.parse(s"""{"arr":${js(arr)},"e":${js(e)}}"""), schema).map(v => (v.path, v.message)).toSet
+      val columnar = viols.filter(v => v._1 == id && !v._2.startsWith("n_tok"))
+        .map(v => (v._2.stripSuffix(":items"), v._3)).toSet
+      assert(columnar === walker, s"row $id")
+    }
+    assert(viols.filter(_._2 == "e[1]:items").map(_._4).toSeq === Seq("null"))
+
+    val verdicts = compiled.verdicts(df, Seq("part")).collect()
+    assert(verdicts.length === 4)
+    verdicts.foreach { v =>
+      assert(v.getAs[Boolean]("pass_all") === (v.getAs[Long]("n_violations") == 0L), v.toString)
+    }
+  }
 }
 
 /** Combinator keywords through the COLUMNAR compiler, cross-checked against
@@ -212,6 +265,7 @@ class MapColumnSpec extends AnyFunSuite {
     val c = containerDup.withColumn("v", compiled.isValidCol).select("v").head().getBoolean(0)
     assert(c === true)
   }
+
 }
 
 /** Rules on nested struct fields via dotted column paths. */
